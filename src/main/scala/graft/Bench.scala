@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
 
 /** Per-round benchmark: times every declared query at $SPARK_GRAFT_SF_DIR.
   *
@@ -16,55 +16,26 @@ import java.nio.file.Files
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
+    val cpus = GraftSession.envCpus
     // dev-only override (driver never sets it): the constrained-heap sweep
     // measures partition sizing as the memory-pressure defense — more,
     // smaller shuffle partitions shrink every per-task buffer, which is the
     // production lever when heap per core drops (the 100 TB sizing rule:
     // partitions scale with data over memory, not with cores)
     val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus.toString)
     // Both AQE partition knobs derive from heap/slot count/input volume —
     // the shared rule every entry point applies (rationale + the measured
     // failures pinning each clamp: [[GraftSession]])
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions),
-      cpus.toInt, sfDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // read parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) directly as
-      // the session's (UTC-pinned) TimestampType — skips the per-row NTZ->LTZ
-      // cast Tables.t would otherwise add on every events scan
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // checkpoint FILES of GC'd frames are only cleaner-reclaimed with this
-      // on (Spark default: false) — long benches would otherwise accrete one
-      // file set per iterative query until the dir is deleted at exit
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.silenceBoundedWindowWarnings()
-    // reliable-checkpoint scratch for iterative queries (DedupClusters hands
-    // its result off through checkpoint files so no block-manager storage
-    // outlives a query); removed on exit
-    val ckptDir = Files.createTempDirectory("graft-bench-ckpt")
-    spark.sparkContext.setCheckpointDir(ckptDir.toString)
+    val spark = GraftSession.build(Some(s"local[$cpus]"), cpus, sfDir,
+      "spark.sql.shuffle.partitions" -> shufflePartitions)
 
     // Per-query WALL-CLOCK watchdog (round-12 verdict #1a): one
     // pathological query must never zero out the whole round's artifact
     // (BENCH_r12 was rc=124/no-data because a single query stalled past
-    // the driver's global timeout). Each query runs on a daemon thread
-    // under its own job group; on breach the group is cancelled
-    // (interruptOnCancel kills the tasks) and the query is recorded in
-    // `failed` with timing -1 — the honesty channel, never a fake number.
-    // Default 240 s = ~30× the heaviest solo protocol median (7.4 s), so
-    // the documented ~15× ambient-contention band cannot false-fail an
-    // honest query, while a genuinely stuck query still costs at most
-    // 4 minutes of the round's budget.
-    val queryTimeoutSec =
-      sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT", "240").toLong
+    // the driver's global timeout) — see [[QueryRunner]].
+    val runner = new QueryRunner(spark, "bench", sys.env.get("SPARK_GRAFT_QUERY_TIMEOUT")
+      .map(_.toLong).getOrElse(QueryRunner.DefaultTimeoutSec))
 
     // Optional per-query spill accounting (dev-only; the driver never sets
     // it): SPARK_GRAFT_SPILL=1 tallies executor memory/disk spill bytes per
@@ -103,61 +74,9 @@ object Bench {
     }
     val spill = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
 
-    def sweep(): Unit = {
-      // queries persist intermediates (dedup signatures etc.) — drop them
-      // so later queries aren't charged for earlier queries' cache/GC.
-      // clearCache only reaches the SQL cache; localCheckpoint blocks live
-      // at the RDD level and must be swept from the context's registry
-      // (the round-4 full-run contamination: one query's leaked blocks
-      // inflated every later query's time)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
-
-    def runOnce(name: String): Either[String, Double] = {
-      // PRE-query sweep too (round-13 advisory): a zombie worker from an
-      // earlier timed-out query could have re-persisted blocks AFTER that
-      // query's post-sweep ran — sweeping again here (untimed) keeps any
-      // such residue from inflating this query's measurement.
-      sweep()
-      val t0 = System.nanoTime()
-      try {
-        @volatile var err: Option[Throwable] = None
-        val group = s"graft-bench-$name"
-        val worker = new Thread(() => {
-          try {
-            // job group is thread-local: set it on the thread that runs the jobs
-            spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
-            SparkEntry.queries(name)(spark, sfDir)
-              .write.mode("overwrite").format("noop").save()
-          } catch { case e: Throwable => err = Some(e) }
-        }, group)
-        worker.setDaemon(true)
-        worker.start()
-        worker.join(queryTimeoutSec * 1000)
-        if (worker.isAlive) {
-          // cancelJobGroup only reaches CURRENTLY-ACTIVE jobs: a driver-side
-          // loop between jobs (iterative components/BPE rounds, local
-          // post-processing) would just submit the next one. Spark 4's
-          // AndFutureJobs variant fails every later submission under the
-          // group, and interrupt() unwinds the driver-side loop itself.
-          spark.sparkContext.cancelJobGroupAndFutureJobs(group)
-          worker.interrupt()
-          worker.join(30000) // give cancellation a moment to unwind
-          if (worker.isAlive)
-            // truly stuck (uninterruptible native call?) — the pre-query
-            // sweep above contains any blocks it re-persists from here on
-            System.err.println(s"[bench] $name worker STILL ALIVE after cancel+interrupt; " +
-              "subsequent queries re-sweep persistent RDDs before timing")
-          System.err.println(s"[bench] $name TIMEOUT after ${queryTimeoutSec}s (cancelled)")
-          Left("Timeout")
-        } else err match {
-          case Some(e) =>
-            System.err.println(s"[bench] $name FAILED: ${e.toString.linesIterator.next()}")
-            Left(e.getClass.getSimpleName)
-          case None => Right((System.nanoTime() - t0) / 1e9)
-        }
-      } finally sweep()
+    def runOnce(name: String): Either[String, Double] = runner.run(name) {
+      SparkEntry.queries(name)(spark, sfDir)
+        .write.mode("overwrite").format("noop").save()
     }
 
     // warm-up (untimed): one scan-heavy, one shuffle-heavy, one text query
@@ -219,39 +138,6 @@ object Bench {
       else s"${outFile}_c$cpus"
     }
 
-    // Ambient-contention self-defense (round-16 verdict #4), SINGLE-pass
-    // mode only (medians make it redundant at >= 2 passes): if a committed
-    // protocol-median file is present (BENCH_LOCAL.json), re-run ONCE any
-    // query whose time exceeds k x its committed median and report the
-    // min, flagged under "ambient_rerun": [first, rerun]. A REAL
-    // regression survives the re-run; an ambient spike doesn't.
-    val rerunFactor =
-      sys.env.getOrElse("SPARK_GRAFT_RERUN_FACTOR", "5").toDouble
-    val mediansPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_MEDIANS", "BENCH_LOCAL.json"))
-    // the committed medians are sf0.1 solo numbers — against any other
-    // scale factor EVERY query reads >5x and the whole run double-times,
-    // so the default file only applies at sf0.1 (the driver's bench sf);
-    // an explicit SPARK_GRAFT_MEDIANS opts in anywhere
-    val mediansApply = sys.env.contains("SPARK_GRAFT_MEDIANS") ||
-      sfDir.replaceAll("/+$", "").endsWith("sf0.1")
-    val medians: Map[String, Double] =
-      if (!mediansApply || !Files.isReadable(mediansPath)) Map.empty
-      else try {
-        val text = Files.readString(mediansPath)
-        // the artifact is flat inside "queries": { "name": secs, ... } —
-        // slice that object and regex the pairs (no JSON lib on purpose)
-        val start = text.indexOf("\"queries\"")
-        val open = if (start < 0) -1 else text.indexOf('{', start)
-        val close = if (open < 0) -1 else text.indexOf('}', open)
-        if (close < 0) Map.empty
-        else "\"([A-Za-z0-9_]+)\"\\s*:\\s*(-?[0-9.]+)".r
-          .findAllMatchIn(text.substring(open, close))
-          .map(m => m.group(1) -> m.group(2).toDouble)
-          .filter(_._2 > 0).toMap
-      } catch { case _: Exception => Map.empty }
-    val reruns = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-
     val passes = scala.collection.mutable.ArrayBuffer.empty[Seq[(String, Either[String, Double])]]
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
@@ -274,53 +160,48 @@ object Bench {
     def runFailed: Seq[Int] =
       passes.map(_.count(_._2.isLeft)).toSeq
 
+    def failedNames(results: Seq[(String, Either[String, Double])]): Seq[String] =
+      results.collect { case (k, Left(_)) => k }
+    // headline value (round-27 advisory fix): SUM OF THE PER-QUERY MEDIANS
+    // — consistent with the "queries" map by construction, and immune to a
+    // transient one-pass failure deflating a pass total (median-of-pass-
+    // totals was not: the deflated total skewed the median while the
+    // per-query medians ignored it). A single pass degrades to the sum of
+    // its per-query times.
+    def headline(results: Seq[(String, Either[String, Double])]): Double =
+      results.collect { case (_, Right(v)) => v }.sum
+
     def record(results: Seq[(String, Either[String, Double])]): String = {
-      val qs = results.map {
-        case (k, Right(v)) => "\"" + k + "\":" + v
-        case (k, Left(_))  => "\"" + k + "\":-1"
-      }.mkString("{", ",", "}")
-      val failed = results.collect { case (k, Left(_)) => "\"" + k + "\"" }
-        .mkString("[", ",", "]")
-      // headline value (round-27 advisory fix): multi-pass = SUM OF THE
-      // PER-QUERY MEDIANS — consistent with the "queries" map by
-      // construction, and immune to a transient one-pass failure deflating
-      // a pass total (median-of-pass-totals was not: the deflated total
-      // skewed the median while the per-query medians ignored it). A
-      // single pass degrades to the sum of its per-query times — which
-      // the ambient-rerun channel may have denoised, so sum the RESULTS.
-      val total = results.collect { case (_, Right(v)) => v }.sum
-      val runsJson = ",\"runs\":" + passes.length +
-        ",\"run_totals\":" + runTotals.map(t => f"$t%.3f").mkString("[", ",", "]") +
-        ",\"run_failed\":" + runFailed.mkString("[", ",", "]")
-      val rerunJson = if (reruns.isEmpty) ""
-      else ",\"ambient_rerun\":" + reruns.map { case (k, (a, b)) =>
-        "\"" + k + "\":[" + a + "," + b + "]"
-      }.mkString("{", ",", "}")
-      val spillJson = if (spillOn)
-        ",\"spill_bytes\":" + spill.map { case (k, (m, dd)) =>
-          "\"" + k + "\":[" + m + "," + dd + "]"
-        }.mkString("{", ",", "}") +
-        (if (spillTainted.isEmpty) ""
-         else ",\"spill_tainted\":" + spillTainted.map("\"" + _ + "\"")
-           .mkString("[", ",", "]"))
-      else ""
+      val spillJson: ListMap[String, Any] =
+        if (!spillOn) ListMap.empty
+        else ListMap("spill_bytes" -> spill.map { case (k, (m, dd)) => k -> Seq(m, dd) }) ++
+          (if (spillTainted.isEmpty) Nil else Seq("spill_tainted" -> spillTainted))
       // "headline" names the aggregation rule IN the artifact (round-19
       // verdict #1: the rule changed once between rounds and silently made
       // totals incommensurable — it is now pinned and self-describing);
       // "cpus" records the slot count so per-core-count artifacts are
       // attributable without exegesis.
-      s"""{"metric":"total","value":$total,"unit":"sec","headline":"sum_of_medians","cpus":$cpus,"queries":$qs,"sf":"$sfDir","failed":$failed$runsJson$rerunJson$spillJson}"""
+      Json.write(ListMap(
+        "metric" -> "total", "value" -> headline(results), "unit" -> "sec",
+        "headline" -> "sum_of_medians", "cpus" -> cpus,
+        "queries" -> ListMap(results.map {
+          case (k, Right(v)) => k -> v
+          case (k, Left(_)) => k -> -1
+        }: _*),
+        "sf" -> sfDir, "failed" -> failedNames(results), "runs" -> passes.length,
+        "run_totals" -> runTotals.map(t => new java.math.BigDecimal(f"$t%.3f")),
+        "run_failed" -> runFailed) ++ spillJson)
     }
     def writeArtifact(results: Seq[(String, Either[String, Double])]): Unit = {
       val bytes = (record(results) + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      Files.write(java.nio.file.Paths.get(outFile), bytes)
+      Files.write(Paths.get(outFile), bytes)
       // Per-query channel restoration (round-19 verdict #2): the driver runs
       // the bench at TWO core counts and both write the same default
       // `bench_result.json`, so the c8 run overwrote the c32 per-query map
       // and PERF had no per-query data two rounds running. A per-core-count
       // copy is a STABLE filename neither run clobbers; the compact stdout
       // line names it so the driver (and the next round) can find it.
-      Files.write(java.nio.file.Paths.get(cpuOutFile), bytes)
+      Files.write(Paths.get(cpuOutFile), bytes)
     }
 
     var timedSec = 0.0
@@ -336,18 +217,7 @@ object Bench {
       writeArtifact(combined) // progressive: a killed later pass still leaves a valid artifact
     }
 
-    val results: Seq[(String, Either[String, Double])] =
-      if (passes.length > 1) combined
-      else combined.map { // single pass: the r16 ambient-rerun channel
-        case (n, Right(v)) if medians.get(n).exists(m => v > rerunFactor * m) =>
-          System.err.println(f"[bench] $n%s ${v}%.2fs > $rerunFactor x committed " +
-            f"median ${medians(n)}%.2fs — ambient re-run")
-          runOnce(n) match {
-            case Right(v2) => reruns(n) = (v, v2); n -> Right(math.min(v, v2))
-            case Left(_)   => n -> Right(v) // re-run failed: keep the honest first pass
-          }
-        case other => other
-      }
+    val results = combined
     // Two channels, two shapes (round-14 verdict #1): the FULL record —
     // per-query map included — goes to bench_result.json (the unambiguous
     // artifact); stdout's FINAL line is a COMPACT summary with no
@@ -357,23 +227,14 @@ object Bench {
     // The compact line is a few hundred bytes and always survives the
     // tail window.
     writeArtifact(results)
-    val failedJson = results.collect { case (k, Left(_)) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    // same rule as record(): sum of per-query medians (multi-pass) / times
-    val headline = results.collect { case (_, Right(v)) => v }.sum
-    val compact =
-      s"""{"metric":"total","value":$headline,"unit":"sec","headline":"sum_of_medians",""" +
-        s""""cpus":$cpus,"n":${names.size},"runs":${passes.length},"sf":"$sfDir",""" +
-        s""""failed":$failedJson,"queries_file":"$outFile","queries_file_cpus":"$cpuOutFile"}"""
+    val compact = Json.write(ListMap(
+      "metric" -> "total", "value" -> headline(results), "unit" -> "sec",
+      "headline" -> "sum_of_medians", "cpus" -> cpus, "n" -> names.size,
+      "runs" -> passes.length, "sf" -> sfDir, "failed" -> failedNames(results),
+      "queries_file" -> outFile, "queries_file_cpus" -> cpuOutFile))
     spark.stop()
-    deleteRecursively(ckptDir.toFile)
     System.out.flush()
     println(compact)
     System.out.flush()
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
   }
 }

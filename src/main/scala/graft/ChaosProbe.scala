@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
 
 /** Executor-loss chaos probe: the RetryProbe discipline one level up.
   *
@@ -28,9 +28,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Prints one JSON line; exit 0 = every kernel injected AND matched.
   */
 object ChaosProbe {
-
-  private def rows(df: DataFrame): Seq[String] =
-    df.collect().map(_.toString).sorted.toSeq
 
   /** SIGKILL the oldest live executor process. The driver (SparkSubmit) and
     * in-JVM workers don't match the executor backend's main class, so the
@@ -67,39 +64,23 @@ object ChaosProbe {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq("graph_bfs_hops", "graph_kcore_peel",
         "graph_common_neighbors", "dedup_minhash", "dedup_winnowing"))
-    val spark = SparkSession.builder()
-      // master comes from spark-submit --master; no .master() here so the
-      // probe cannot silently run single-JVM (it would then test nothing)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // master comes from spark-submit --master; none here so the probe
+    // cannot silently run single-JVM (it would then test nothing)
+    val spark = GraftSession.build(None, 32, sfDir)
     require(spark.sparkContext.master.startsWith("local-cluster"),
       s"chaos needs multi-process executors; got ${spark.sparkContext.master}")
-    spark.sparkContext.setLogLevel("WARN")
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-chaos-ckpt")
-    spark.sparkContext.setCheckpointDir(ckptDir.toString)
-
-    def sweep(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
 
     val nExecutors = executorCount()
     require(nExecutors >= 2, s"need >=2 executor processes, saw $nExecutors")
 
     var failures = List.empty[String]
     val results = kernels.map { name =>
-      sweep()
+      QueryRunner.sweep(spark)
       awaitExecutors(nExecutors)
       val t0 = System.nanoTime()
-      val control = rows(SparkEntry.queries(name)(spark, sfDir))
+      val control = RetryProbe.rows(SparkEntry.queries(name)(spark, sfDir))
       val controlS = (System.nanoTime() - t0) / 1e9
-      sweep()
+      QueryRunner.sweep(spark)
       // kill mid-query; if the kill landed after the query ended (ambient
       // speedup), retry with an earlier kill point — an uninjected pass
       // proves nothing. A query ABORT under injection is a recorded
@@ -127,7 +108,7 @@ object ChaosProbe {
         killer.setDaemon(true)
         val t1 = System.nanoTime()
         killer.start()
-        val out = try Right(rows(SparkEntry.queries(name)(spark, sfDir)))
+        val out = try Right(RetryProbe.rows(SparkEntry.queries(name)(spark, sfDir)))
           catch { case e: Throwable => Left(e) }
         endNanos = System.nanoTime()
         killer.join(5000)
@@ -144,7 +125,7 @@ object ChaosProbe {
             "after query end — retrying earlier")
           frac = frac / 2
         }
-        sweep()
+        QueryRunner.sweep(spark)
       }
       if (!injected) failures ::= s"$name: kill never landed mid-query"
       else if (!matched)
@@ -158,17 +139,14 @@ object ChaosProbe {
     }
 
     val ok = failures.isEmpty
-    val kj = results.map { case (n, c, h, inj, m) =>
-      f""""$n":{"control_s":$c%.2f,"chaos_s":$h%.2f,"injected":$inj,"match":$m}"""
-    }.mkString("{", ",", "}")
-    println(s"""{"probe":"executor_loss","master":"${spark.sparkContext.master}",""" +
-      s""""sf":"$sfDir","kernels":$kj,"pass":$ok,"failures":${failures.map(f =>
-        "\"" + f.replace("\"", "'") + "\"").mkString("[", ",", "]")}}""")
+    def secs(x: Double) = new java.math.BigDecimal(f"$x%.2f")
+    println(Json.write(ListMap(
+      "probe" -> "executor_loss", "master" -> spark.sparkContext.master, "sf" -> sfDir,
+      "kernels" -> ListMap(results.map { case (n, c, h, inj, m) =>
+        n -> ListMap("control_s" -> secs(c), "chaos_s" -> secs(h), "injected" -> inj, "match" -> m)
+      }: _*),
+      "pass" -> ok, "failures" -> failures)))
     spark.stop()
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(ckptDir.toFile)
     if (!ok) sys.exit(1)
   }
 }

@@ -1,27 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan of one or more declared
   * queries, e.g. `sbt "runMain graft.Explain /root/testdata/sf0.01 filter_pred"`.
   * Used to audit pushdown (PushedFilters), broadcast choices and
-  * WholeStageCodegen spans after each operator change.
+  * WholeStageCodegen spans after each operator change. Plans under the
+  * same session regime as Bench and Verify ([[GraftSession.build]]).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // read parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) directly as
-      // the session's (UTC-pinned) TimestampType — skips the per-row NTZ->LTZ
-      // cast Tables.t would otherwise add on every events scan
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession.build(Some(s"local[$cpus]"), cpus, sfDir)
     names.foreach { n =>
       println(s"\n===== $n =====")
       try SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -59,12 +59,66 @@ object GraftSession {
     * and skew sweeps pin it); the advisory derives unconditionally.
     */
   def configure(b: SparkSession.Builder, cpus: Int,
-      sfDir: String): SparkSession.Builder = {
-    val advisory = advisoryBytes(cpus)
-    val init = sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS",
-      initialPartitions(cpus, inputBytes(sfDir)).toString)
-    b.config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory.toString)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", init)
+      sfDir: String): SparkSession.Builder =
+    aqe(cpus, sfDir).foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
+
+  private def aqe(cpus: Int, sfDir: String): Seq[(String, String)] = Seq(
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisoryBytes(cpus).toString,
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+      sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS",
+        initialPartitions(cpus, inputBytes(sfDir)).toString))
+
+  /** Slot count of the harness mains: `SPARK_GRAFT_CPUS`, else every core. */
+  def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The settings every engine session shares: [[build]] applies them. */
+  def conf(cpus: Int, sfDir: String): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    // events.parquet may carry ts as TIMESTAMP(NANOS), which Spark's reader
+    // rejects unless it reads as a LONG of epoch-nanos (Tables.t rebuilds it)
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // read parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) directly as
+    // the session's (UTC-pinned) TimestampType — skips the per-row NTZ->LTZ
+    // cast Tables.t would otherwise add on every events scan
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+    // checkpoint FILES of GC'd frames are only cleaner-reclaimed with this
+    // on (Spark default: false) — long runs would otherwise accrete one
+    // file set per iterative query until the dir is deleted at stop
+    "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true",
+    "spark.ui.enabled" -> "false") ++ aqe(cpus, sfDir)
+
+  /** Build (or join) the engine session: [[conf]], then the caller's
+    * `extra` settings (which win), WARN logging, and a reliable-checkpoint
+    * scratch dir for iterative queries (DedupClusters hands its result off
+    * through checkpoint files) that is deleted when the context stops.
+    * `master = None` leaves the master to spark-submit. `sfDir` is the
+    * input the AQE pair is sized from; a dir that does not exist sizes the
+    * initial partition count at `cpus`.
+    */
+  def build(master: Option[String], cpus: Int, sfDir: String,
+      extra: (String, String)*): SparkSession = {
+    val b = SparkSession.builder()
+    master.foreach(b.master)
+    (conf(cpus, sfDir) ++ extra).foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    silenceBoundedWindowWarnings()
+    val ckptDir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+    spark.sparkContext.setCheckpointDir(ckptDir.toString)
+    // stop() drains the listener bus before it returns, so the dir is gone
+    // by the time the caller's stop() does
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onApplicationEnd(
+          e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = rm(ckptDir)
+    })
+    spark
+  }
+
+  private def rm(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rm))
+    f.delete(): Unit
   }
 
   /** Raise the log level for Spark's window exec nodes to ERROR (round-27,

@@ -5,7 +5,6 @@ import graft.ingest.Sink
 import graft.notify.LogNotifier
 import graft.schema.CtbSchema
 import graft.streaming.StreamIngest
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Executable end-to-end example of the ingest surface: builds a temp
@@ -33,15 +32,8 @@ object IngestDemo {
     "GC", "cpd", "2025-01-01").mkString("\t")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
     val root = Files.createTempDirectory("graft-demo").toString
+    val spark = GraftSession.build(Some("local[4]"), 4, root)
     Files.createDirectories(Paths.get(root, "in"))
     val cfg = GraftConfig.fromEnv(Map(
       "GRAFT_INPUT_DIR" -> s"$root/in",

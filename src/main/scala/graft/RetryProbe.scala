@@ -6,6 +6,8 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ListMap
+
 /** Task-retry determinism probe (runnable; the shared test session cannot
   * host it because `spark.task.maxFailures` is fixed at context creation
   * and the suite-wide `local[4]` context fails fast).
@@ -73,30 +75,33 @@ object RetryProbe {
       .toDF("doc_id", "text")
   }
 
-  private def rows(df: DataFrame): Seq[String] =
+  /** A result as its sorted row strings: the probes' exact-match form. */
+  private[graft] def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8, 3]") // 3 attempts per task — retries are live
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** Deterministic corpus with real dup/near-dup structure: 60 templates
+    * x words with a per-doc suffix tail so ngram pairs and compression
+    * ratios are non-trivial. Persisted and counted, so control and probed
+    * runs read identical splits.
+    */
+  private[graft] def corpus(spark: SparkSession): DataFrame = {
     import spark.implicits._
-
-    // deterministic corpus with real dup/near-dup structure: 60 templates
-    // x words with a per-doc suffix tail so ngram pairs and compression
-    // ratios are non-trivial
     val docs = (0 until 3000).map { i =>
       val f = i % 60
       val base = (0 until 24).map(k => s"w${f}x$k").mkString(" ")
       val tail = (0 until (i % 5)).map(k => s"t${i % 17}y$k").mkString(" ")
       (i.toLong, s"$base $tail".trim)
     }.toDF("doc_id", "text").repartition(8).persist()
-    docs.count() // pin the input so control and faulty read identical splits
+    docs.count()
+    docs
+  }
+
+  def main(args: Array[String]): Unit = {
+    // 3 attempts per task — retries are live; the input is generated
+    // in-driver (no table dir to size from)
+    val spark = GraftSession.build(Some("local[8, 3]"), 8, "",
+      "spark.sql.extensions" -> "graft.expressions.GraftExtensions")
+    val docs = corpus(spark)
 
     var failures = List.empty[String]
     def check(name: String, control: => DataFrame, injected: => DataFrame): Unit = {
@@ -124,9 +129,8 @@ object RetryProbe {
         .groupBy("fp").agg(count(lit(1)).as("n")))
 
     val ok = failures.isEmpty && fired.get() == 3
-    println(s"""{"probe":"retry_determinism","injected":${fired.get()},""" +
-      s""""kernels":3,"pass":$ok,"failures":${failures.map(f =>
-        "\"" + f.replace("\"", "'") + "\"").mkString("[", ",", "]")}}""")
+    println(Json.write(ListMap("probe" -> "retry_determinism", "injected" -> fired.get(),
+      "kernels" -> 3, "pass" -> ok, "failures" -> failures)))
     spark.stop()
     if (!ok) sys.exit(1)
   }

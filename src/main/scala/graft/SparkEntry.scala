@@ -31,13 +31,11 @@ object SparkEntry {
     * `persist()` an intermediate that is consumed more than once inside the
     * returned lazy plan (e.g. dedup_winnowing's fingerprint frame,
     * graph_pagerank/graph_communities' edge list). Those blocks live until
-    * the CALLER releases them — Verify and Bench both run, after every
-    * query: `spark.catalog.clearCache()` +
-    * `sc.getPersistentRDDs.values.foreach(_.unpersist())`. Any standalone
-    * embedder of this map must apply the same per-query sweep (or accept
-    * the cache residue); iterative helpers that manage their own lifecycle
-    * (DedupClusters, GraphOps) instead guarantee zero residue via their
-    * checkpoint-chain handoff.
+    * the CALLER releases them: run each query through [[QueryRunner]]
+    * (as Verify and Bench do) on a session from [[GraftSession.build]];
+    * iterative helpers that manage their own lifecycle (DedupClusters,
+    * GraphOps) instead guarantee zero residue via their checkpoint-chain
+    * handoff.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     packs.flatMap(_.queries).toMap

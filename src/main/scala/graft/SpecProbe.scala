@@ -3,8 +3,10 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import scala.collection.immutable.ListMap
 
 /** Speculative-execution determinism probe — the third execution-boundary
   * axis after RetryProbe (task retry) and ChaosProbe (executor loss).
@@ -61,17 +63,12 @@ object SpecProbe {
     }.toDF(cols: _*)
   }
 
-  private def rows(df: DataFrame): Seq[String] =
-    df.collect().map(_.toString).sorted.toSeq
-
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      // master/speculation confs come from spark-submit; nothing set here
-      // so the probe cannot silently run single-JVM or speculation-off
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // master/speculation confs come from spark-submit; neither is set here
+    // so the probe cannot silently run single-JVM or speculation-off. The
+    // input is generated in-driver (no table dir to size from).
+    val spark = GraftSession.build(None, 8, "",
+      "spark.sql.extensions" -> "graft.expressions.GraftExtensions")
     // NOT local-cluster: Spark refuses to launch a speculative attempt on
     // the host the original attempt runs on (dequeueSpeculativeTask skips
     // hosts with an attempt), and local-cluster's executors all share one
@@ -84,8 +81,6 @@ object SpecProbe {
         s"two workers with distinct SPARK_LOCAL_HOSTNAME); got ${spark.sparkContext.master}")
     require(spark.conf.get("spark.speculation") == "true",
       "submit with speculation enabled — see scaladoc")
-    spark.sparkContext.setLogLevel("WARN")
-    graft.expressions.GraftFunctions.register(spark)
     import spark.implicits._
 
     val specStarts = new AtomicLong
@@ -96,14 +91,7 @@ object SpecProbe {
           if (e.taskInfo.speculative) { specStarts.incrementAndGet(); () }
       })
 
-    // deterministic corpus with dup/near-dup structure (RetryProbe's shape)
-    val docs = (0 until 3000).map { i =>
-      val f = i % 60
-      val base = (0 until 24).map(k => s"w${f}x$k").mkString(" ")
-      val tail = (0 until (i % 5)).map(k => s"t${i % 17}y$k").mkString(" ")
-      (i.toLong, s"$base $tail".trim)
-    }.toDF("doc_id", "text").repartition(8).persist()
-    docs.count()
+    val docs = RetryProbe.corpus(spark)
     // events-ish frame for the TypedImperativeAggregate kernel
     val events = (0 until 20000).map(i => ((i * 2654435761L) % 700, s"t${i % 5}"))
       .toDF("user_id", "event_type").repartition(8).persist()
@@ -113,14 +101,14 @@ object SpecProbe {
     val results = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Boolean)]
     def check(name: String, control: => DataFrame,
         probed: => DataFrame): Unit = {
-      val c = rows(control)
+      val c = RetryProbe.rows(control)
       var attempt = 0
       var raced = 0L
       var matched = false
       while (raced == 0 && attempt < 3) {
         attempt += 1
         val before = specStarts.get()
-        val p = rows(probed)
+        val p = RetryProbe.rows(probed)
         // listener events are async — settle before reading the counter
         Thread.sleep(500)
         raced = specStarts.get() - before
@@ -152,12 +140,12 @@ object SpecProbe {
         .agg(call_function("graft_bitmap_distinct", col("user_id")).as("n_users")))
 
     val ok = failures.isEmpty
-    val kj = results.map { case (n, (r, m)) =>
-      s""""$n":{"speculative_attempts":$r,"match":$m}"""
-    }.mkString("{", ",", "}")
-    println(s"""{"probe":"speculation_race","master":"${spark.sparkContext.master}",""" +
-      s""""kernels":$kj,"pass":$ok,"failures":${failures.map(f =>
-        "\"" + f.replace("\"", "'") + "\"").mkString("[", ",", "]")}}""")
+    println(Json.write(ListMap(
+      "probe" -> "speculation_race", "master" -> spark.sparkContext.master,
+      "kernels" -> results.map { case (n, (r, m)) =>
+        n -> ListMap("speculative_attempts" -> r, "match" -> m)
+      },
+      "pass" -> ok, "failures" -> failures)))
     spark.stop()
     if (!ok) sys.exit(1)
   }

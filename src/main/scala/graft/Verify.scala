@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,33 +8,17 @@ object Verify {
     // optional trailing args: restrict to named queries (dev iteration only;
     // the driver always runs the full surface)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
+    val cpus = GraftSession.envCpus
     // dev-only master override (driver never sets it): the multi-JVM
     // invariance pass runs the SAME surface under local-cluster[2,16,m]
     // so shuffle blocks, broadcasts, and TypedImperativeAggregate partial
     // states cross a real process/serialization boundary (local[n] keeps
     // everything in one JVM and never exercises those paths)
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    // derived AQE partition knobs — ONE shared code path with Bench (and
-    // any embedder), so the correctness surface always runs the identical
-    // plan regime the bench measures (rationale: [[GraftSession]])
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus),
-      cpus.toInt, sfDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // read parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) directly as
-      // the session's (UTC-pinned) TimestampType — skips the per-row NTZ->LTZ
-      // cast Tables.t would otherwise add on every events scan
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // let the context cleaner reclaim checkpoint files of GC'd frames
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.silenceBoundedWindowWarnings()
+    // ONE shared session path with Bench (and any embedder), so the
+    // correctness surface always runs the identical plan regime the bench
+    // measures (rationale: [[GraftSession]])
+    val spark = GraftSession.build(Some(master), cpus, sfDir)
     // dev-only speculative-attempt counter (driver never sets it): the
     // speculation-determinism pass must prove duplicate attempts actually
     // RACED (a run where zero tasks were speculated proves nothing), and
@@ -50,46 +33,18 @@ object Verify {
               e: org.apache.spark.scheduler.SparkListenerTaskStart): Unit =
             if (e.taskInfo.speculative) { specCount.incrementAndGet(); () }
         })
-    // reliable-checkpoint scratch for iterative queries (see Bench)
-    val ckptDir = Files.createTempDirectory("graft-verify-ckpt")
-    spark.sparkContext.setCheckpointDir(ckptDir.toString)
     new java.io.File(outDir).mkdirs()
+    val runner = new QueryRunner(spark, "verify")
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        runner.run(name) {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        }
       }
-      finally {
-        // drop per-query persisted intermediates: the SQL cache AND any
-        // RDD-level localCheckpoint blocks (clearCache can't reach the latter)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Json.write(SparkEntry.oracleSql))
     if (sys.env.get("SPARK_GRAFT_COUNT_SPECULATIVE").contains("1"))
       System.err.println(s"[verify] speculative_attempts=${specCount.get}")
     spark.stop()
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(ckptDir.toFile)
   }
 }

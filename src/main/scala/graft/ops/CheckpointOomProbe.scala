@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Minimal reproduction of the round-25 third-decade finding (BASELINE.md
@@ -36,22 +36,14 @@ object CheckpointOomProbe {
     val mode = args.headOption.getOrElse("default")
     val rows = sys.env.getOrElse("PROBE_ROWS", "200000000").toLong // 200M (id, label) pairs
     val rounds = sys.env.getOrElse("PROBE_ROUNDS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-    mode match {
-      case "blockmanager" => b.config("spark.graft.iter.localReliableBytes", "0")
-      case "reliable" => b.config("spark.graft.iter.resilient", "true")
-      case _ => ()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val modeConf = mode match {
+      case "blockmanager" => Seq("spark.graft.iter.localReliableBytes" -> "0")
+      case "reliable" => Seq("spark.graft.iter.resilient" -> "true")
+      case _ => Nil
     }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-oom-probe-ckpt")
-    spark.sparkContext.setCheckpointDir(ckptDir.toString)
+    // the frame is generated in-plan (no table dir to size from)
+    val spark = graft.GraftSession.build(Some(s"local[$cpus]"), cpus, "", modeConf: _*)
 
     val t0 = System.nanoTime()
     val chain = new IterativeCompute.CheckpointChain(spark)
@@ -71,12 +63,9 @@ object CheckpointOomProbe {
     chain.release()
     val secs = (System.nanoTime() - t0) / 1e9
     spark.stop()
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(ckptDir.toFile)
-    println(s"""{"probe":"checkpoint_oom","mode":"$mode","rows":$rows,""" +
-      s""""rounds":$rounds,"heap_mb":${Runtime.getRuntime.maxMemory / (1 << 20)},""" +
-      f""""completed":true,"secs":$secs%.1f}""")
+    println(graft.Json.write(scala.collection.immutable.ListMap(
+      "probe" -> "checkpoint_oom", "mode" -> mode, "rows" -> rows, "rounds" -> rounds,
+      "heap_mb" -> Runtime.getRuntime.maxMemory / (1 << 20), "completed" -> true,
+      "secs" -> new java.math.BigDecimal(f"$secs%.1f"))))
   }
 }

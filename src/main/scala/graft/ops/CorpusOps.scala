@@ -18,12 +18,6 @@ import Tables._
   */
 object CorpusOps extends Pack {
 
-  /** 60-bit deterministic hash shared with the DuckDB oracle (TextOps
-    * convention — 15 hex chars of md5 so the value fits a signed long).
-    */
-  private def h60(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    call_function("graft_h60", c) // native one-pass kernel (r20); registered by Tables.t
-
   /** URL canonicalization chain (all codegen'd string ops, no UDF):
     * lowercase -> strip fragment -> strip utm_* query -> strip :443
     * default port -> strip trailing slash. Idempotent: canonical URLs are
@@ -260,7 +254,6 @@ object CorpusOps extends Pack {
       // aggregate — agg_bitmap's first (type, chunk) exchange disappears,
       // and partial bitmaps merge map-side by bit_or. Same oracle:
       // count(DISTINCT) in DuckDB, a third algorithm agreeing.
-      graft.expressions.GraftFunctions.register(s)
       t(s, d, "events")
         .groupBy(col("event_type"))
         .agg(call_function("graft_bitmap_distinct", col("user_id")).as("n_users"))
@@ -953,7 +946,6 @@ object CorpusOps extends Pack {
       // threshold would re-shuffle the corpus once per point). Same
       // kernel, same codegen'd agreement, no verify filter — the
       // histogram is one tiny aggregate on top.
-      graft.expressions.GraftFunctions.register(s)
       val bands = TextOps.minhashBands(
         t(s, d, "documents").select(col("doc_id"), col("text"))).persist()
       // both-band duplicates are suppressed IN the join condition (emit the

@@ -300,7 +300,6 @@ object ExtraRelational extends Pack {
       // [[graft.expressions.XmlOrderExtract]] kernel extracts the same
       // attribute + elements with full entity decoding in one pass over the
       // string, inside whole-stage codegen.
-      graft.expressions.GraftFunctions.register(s)
       val title = concat(col("o_orderpriority"), lit(" & <x>"))
       // literal single-char patterns: StringReplace, not the regex engine
       val escaped = replace(replace(replace(
@@ -331,7 +330,6 @@ object ExtraRelational extends Pack {
       // scans the JSON text once and extracts all four paths (honest
       // parser: field order free, escapes decoded, missing path -> null),
       // inside whole-stage codegen.
-      graft.expressions.GraftFunctions.register(s)
       val json = concat(lit("{\"k\":"), col("o_orderkey"),
         lit(",\"m\":{\"s\":\""), col("o_orderstatus"),
         lit("\",\"c\":"), round(col("o_totalprice") * 100).cast("long"),
@@ -789,13 +787,19 @@ object ExtraRelational extends Pack {
           eS(2, col("o_orderstatus")),
           eS(5, col("o_orderpriority"))), Seq("vs")),
         count(col("vs")), col("vs").isNull, min(col("vs")), max(col("vs")))
-      longs.unionByName(strs)
+      // an empty table has no level-1 rows and so no gids: keep every
+      // column's row, as the global aggregates of the SQL form do, by
+      // joining the ≤6-row rollup onto the six gids (zero counts when absent)
+      val gids = s.range(6).select(col("id").cast("int").as("gid"))
+      gids.join(broadcast(longs.unionByName(strs)), Seq("gid"), "left")
         .select(element_at(
             map(lit(0), lit("o_orderkey"), lit(1), lit("o_custkey"),
               lit(2), lit("o_orderstatus"), lit(3), lit("o_totalprice_cents"),
               lit(4), lit("o_orderdate"), lit(5), lit("o_orderpriority")),
             col("gid")).as("col_name"),
-          col("n_rows"), col("n_null"), col("n_distinct"),
+          coalesce(col("n_rows"), lit(0L)).as("n_rows"),
+          coalesce(col("n_null"), lit(0L)).as("n_null"),
+          coalesce(col("n_distinct"), lit(0L)).as("n_distinct"),
           col("min_s"), col("max_s"))
         .orderBy("col_name")
     }),

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Tables.h60
 
 /** Incremental corpus gram-statistics: maintain the word-3-gram
   * document-frequency table of a continuously-ingesting corpus without
@@ -30,9 +31,6 @@ import org.apache.spark.sql.functions._
   * equi-joins on that key.
   */
 object GramDfIncremental {
-
-  private def h60(c: org.apache.spark.sql.Column) =
-    call_function("graft_h60", c) // native one-pass kernel (r20); registered by Tables.t
 
   /** Distinct (doc_id, g) gram-hash pairs of a (doc_id, text) batch. */
   def gramPairs(docs: DataFrame): DataFrame = {

@@ -343,7 +343,6 @@ object IvfIncremental {
     */
   private[ops] def stageRecluster(spark: SparkSession, indexPath: String, nCells: Int,
       maxRounds: Int = 10, tolSq: Long = 0L): KMeans.Model = {
-    graft.expressions.GraftFunctions.register(spark)
     val stored = readVectors(spark, indexPath)
       .select(col("vec_id"), col("q").as("v")).persist()
     try {

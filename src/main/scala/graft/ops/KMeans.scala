@@ -130,6 +130,7 @@ object KMeans {
     */
   def assign(vecs: DataFrame, cents: Array[(Int, Array[Long])]): DataFrame = {
     require(cents.nonEmpty, "cannot assign against an empty centroid set")
+    graft.expressions.GraftFunctions.register(vecs.sparkSession)
     if (cents.length <= MaxLiteralFoldCells) assignFlat(vecs, cents)
     else assignFolded(vecs, cents)
   }
@@ -146,8 +147,6 @@ object KMeans {
     * tight long-loop dots per row, all inside whole-stage codegen.
     */
   private[ops] def assignFlat(vecs: DataFrame, cents: Array[(Int, Array[Long])]): DataFrame = {
-    val spark = vecs.sparkSession
-    graft.expressions.GraftFunctions.register(spark)
     val cands = cents.map { case (cell, cv) =>
       struct(
         (lit(selfDot(cv)) - lit(2L) * call_function("graft_dot_i64", col("v"), typedlit(cv.toSeq)))
@@ -166,8 +165,6 @@ object KMeans {
     * the dot itself still in the native kernel.
     */
   private[ops] def assignFolded(vecs: DataFrame, cents: Array[(Int, Array[Long])]): DataFrame = {
-    val spark = vecs.sparkSession
-    graft.expressions.GraftFunctions.register(spark)
     val centLit = typedlit(cents.map { case (cell, cv) => (cell, cv.toSeq, selfDot(cv)) }.toSeq)
     val best = aggregate(
       centLit,

@@ -30,7 +30,10 @@ import org.apache.spark.sql.functions._
 object MinHashIncremental {
 
   /** Band-table rows for a batch of (doc_id, text) documents. */
-  def signatures(docs: DataFrame): DataFrame = TextOps.minhashBands(docs)
+  def signatures(docs: DataFrame): DataFrame = {
+    graft.expressions.GraftFunctions.register(docs.sparkSession)
+    TextOps.minhashBands(docs)
+  }
 
   final case class BatchDedup(
       /** near-dup pairs (doc_a < doc_b, n_agree >= 14) where at least one

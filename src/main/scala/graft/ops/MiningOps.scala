@@ -20,10 +20,6 @@ import Tables._
   */
 object MiningOps extends Pack {
 
-  /** 60-bit deterministic hash shared with the DuckDB oracle (TextOps twin). */
-  private def h60(c: Column): Column =
-    call_function("graft_h60", c) // native one-pass kernel (r20); registered by Tables.t
-
   private def toks(c: Column): Column = split(c, " ")
 
   private val tokSql = "string_split(text, ' ')"

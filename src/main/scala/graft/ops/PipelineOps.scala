@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.Tables.{t, Pack, Q}
+import graft.ops.Tables.{h60, h60Sql, t, Pack, Q}
 
 /** Round-7 surface extensions: event-sequence analytics (activity streaks,
   * cohort retention), corpus-statistics text ops (document-frequency gram
@@ -24,10 +24,6 @@ object PipelineOps extends Pack {
 
   private def toks(c: org.apache.spark.sql.Column) = split(c, " ")
   private val tokSql = "string_split(text, ' ')"
-  private def h60(c: org.apache.spark.sql.Column) =
-    call_function("graft_h60", c) // native one-pass kernel (r20); registered by Tables.t
-  private val h60Sql = "('0x'||substr(md5(%s),1,15))::BIGINT"
-
   val queries: Map[String, Q] = Map(
 
     "prep_filter_stack" -> ((s, d) => {

@@ -39,11 +39,6 @@ private[graft] object CountMin {
 
 object ScaleOps extends Pack {
 
-  /** 60-bit deterministic hash shared with the DuckDB oracle (TextOps twin). */
-  private def h60(c: Column): Column =
-    call_function("graft_h60", c) // native one-pass kernel (r20); registered by Tables.t
-  private val h60Sql = "('0x'||substr(md5(%s),1,15))::BIGINT"
-
   /** Poisson(λ=1) inverse-CDF thresholds scaled to the 60-bit hash
     * domain (draw count k = first threshold the hash-uniform falls
     * under; tail capped at 5 — P(k>5) ≈ 6e-4). Computed ONCE here and
@@ -344,7 +339,6 @@ object ScaleOps extends Pack {
       // constrained regime (m < distinct: overestimates bounded by N/m,
       // heavy hitters guaranteed present) is property-tested in
       // HeavyHittersSpec.
-      graft.expressions.GraftFunctions.register(s)
       t(s, d, "documents")
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(col("w") =!= "")
@@ -371,7 +365,6 @@ object ScaleOps extends Pack {
       // bound is ~1.6 % of n. The exact regime (n < k → no compression →
       // exact order statistics) and merge-split invariance are pinned in
       // QDigestSpec.
-      graft.expressions.GraftFunctions.register(s)
       val base = t(s, d, "lineitem")
         .select(col("l_returnflag"), col("l_quantity").cast("long").as("v"))
       val sk = base.groupBy(col("l_returnflag"))

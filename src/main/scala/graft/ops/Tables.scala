@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Table access for the engine's query surface.
@@ -46,6 +46,15 @@ object Tables {
       }
     } else spark.read.parquet(s"$sfDir/$name.parquet")
   }
+
+  /** 60-bit deterministic hash shared with the DuckDB oracles: the top 15
+    * hex digits of md5 as a signed bigint, in the native one-pass kernel
+    * (registered by [[t]]).
+    */
+  def h60(c: Column): Column = call_function("graft_h60", c)
+
+  /** DuckDB twin of [[h60]], a format string over one SQL expression. */
+  val h60Sql = "('0x'||substr(md5(%s),1,15))::BIGINT"
 
   /** A pack couples each Spark query with its DuckDB oracle SQL so the two
     * stay reviewable side by side (oracle parity is the correctness gate).

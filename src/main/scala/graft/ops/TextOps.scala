@@ -21,11 +21,6 @@ import Tables._
   */
 object TextOps extends Pack {
 
-  /** 60-bit deterministic hash shared with the DuckDB oracle. */
-  private def h60(c: Column): Column =
-    call_function("graft_h60", c) // native one-pass kernel (r20); registered by Tables.t
-  private val h60Sql = "('0x'||substr(md5(%s),1,15))::BIGINT"
-
   /** DEFLATE-ratio quality gate (the CCNet/Gopher-style compressibility
     * signal): per document, UTF-8 byte count, deflated byte count, and
     * ratio in permille. Highly compressible text (low ratio) is
@@ -95,7 +90,6 @@ object TextOps extends Pack {
     * the exact same kernel.
     */
   private[ops] def sigsOf(docs: DataFrame): DataFrame = {
-    graft.expressions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"), call_function("graft_minhash16", col("text")).as("sig"))
       .filter(col("sig").isNotNull)
@@ -186,7 +180,6 @@ object TextOps extends Pack {
   private[ops] val ExpandBlock = 64
 
   private def minhashAllPairs(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val sigs = sigsOf(t(s, d, "documents").select(col("doc_id"), col("text")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("sig")).orderBy(col("doc_id"))
@@ -260,7 +253,6 @@ object TextOps extends Pack {
   }
 
   private def minhashComponents(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val sigs = sigsOf(t(s, d, "documents").select(col("doc_id"), col("text")))
       .persist()
     val groups = sigs.groupBy(col("sig")).agg(min(col("doc_id")).as("rep"))
@@ -291,7 +283,6 @@ object TextOps extends Pack {
     * null fingerprint and are filtered, mirroring the no-group form.
     */
   private[ops] def simhashOf(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     t(s, d, "documents")
       .select(col("doc_id"),
         call_function("graft_simhash32", col("text")).as("simhash"))
@@ -385,6 +376,7 @@ object TextOps extends Pack {
     * @param minShared min shared shingles for a pair to be reported
     */
   def ngramNearDups(docs: DataFrame, dfCap: Int = 200, minShared: Int = 3): NgramDedupResult = {
+    graft.expressions.GraftFunctions.register(docs.sparkSession)
     val base = docs
       .select(col("doc_id"), toks(col("text")).as("ws"))
       .filter(size(col("ws")) >= 3)
@@ -692,7 +684,6 @@ object TextOps extends Pack {
       // fold(nfc(messy)) == original — true on every row by
       // construction, a self-auditing column. Narrow per-row map; the
       // only shuffle is the final ORDER BY.
-      graft.expressions.GraftFunctions.register(s)
       val messy = when(pmod(col("doc_id"), lit(3)) === 0,
           // PRECOMPOSED accents U+00E1/E9/ED/F3/FA, escape-explicit: a 1:1
           // codepoint map is what translate() requires

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Tables.h60
 
 /** The end-to-end "prepare a training shard" composition: quality filter →
   * exact dedup → MinHash near-dedup → benchmark decontamination →
@@ -27,9 +28,6 @@ object TrainingDataPrep {
   final case class PrepStats(
       input: Long, afterQuality: Long, afterExactDedup: Long,
       afterNearDedup: Long, afterDecontam: Long, sampled: Long)
-
-  private def h60(c: Column): Column =
-    call_function("graft_h60", c) // native one-pass kernel (r20); registered by Tables.t
 
   /** The text_quality operating point (same predicate as the oracle-checked
     * query): plausible length, enough tokens, bounded punctuation density.

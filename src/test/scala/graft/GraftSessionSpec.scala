@@ -33,4 +33,22 @@ class GraftSessionSpec extends AnyFunSuite {
       == 16L) // clamp floor follows cpus
     assert(GraftSession.advisoryBytes(16, g8) == (64L << 20)) // 512MB/slot -> cap
   }
+
+  test("conf holds every shared session setting, AQE pair included") {
+    val c = GraftSession.conf(8, "/nonexistent-sf-dir").toMap
+    assert(c("spark.sql.shuffle.partitions") == "8")
+    assert(c("spark.sql.session.timeZone") == "UTC")
+    assert(c("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(c("spark.sql.parquet.inferTimestampNTZ.enabled") == "false")
+    assert(c("spark.cleaner.referenceTracking.cleanCheckpoints") == "true")
+    assert(c("spark.ui.enabled") == "false")
+    assert(c("spark.sql.adaptive.advisoryPartitionSizeInBytes") ==
+      GraftSession.advisoryBytes(8).toString)
+    assert(c.contains("spark.sql.adaptive.coalescePartitions.initialPartitionNum"))
+  }
+
+  test("the shared test session pins the initial partition count, whatever the env holds") {
+    assert(SparkSpec.session.conf.get(
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "4")
+  }
 }

@@ -11,35 +11,16 @@ trait SparkSpec { self: Suite =>
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+  lazy val session: SparkSession = GraftSession.build(Some("local[4]"), 4, "",
+    "spark.app.name" -> "graft-test",
+    // pinned, so SPARK_GRAFT_INIT_PARTITIONS in the environment cannot
+    // change tier-1 plans (4 = Spark's default: the shuffle partition count)
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "4",
     // the idiomatic deployment path for the native graft_* expressions —
     // ExpressionsSpec proves they resolve with NO in-session registration
-    .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-    // let the context cleaner reclaim checkpoint files of GC'd frames
-    .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+    "spark.sql.extensions" -> "graft.expressions.GraftExtensions",
     // keep catalog-touching suites (JDBC dialects) from dropping a
     // spark-warehouse/ dir at the repo root (r26 verdict task 8)
-    .config("spark.sql.warehouse.dir",
+    "spark.sql.warehouse.dir" ->
       java.nio.file.Files.createTempDirectory("graft-test-wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  {
-    // reliable-checkpoint scratch: iterative ops (DedupClusters) hand their
-    // results off through checkpoint files so no RDD blocks outlive a call
-    val dir = java.nio.file.Files.createTempDirectory("graft-test-ckpt")
-    session.sparkContext.setCheckpointDir(dir.toString)
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir.toFile)
-    }
-  }
 }
