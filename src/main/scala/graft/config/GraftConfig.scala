@@ -10,9 +10,9 @@ package graft.config
   *   GMAIL_QUERY                -> sourceGlob (pushdown predicate on the source listing)
   *   GCS_UNPROCESSED_PATH       -> inputDir (the polled "mailbox" directory)
   *   BIGQUERY_DATASET/TABLE     -> sinkDir (destination table path)
-  *   NOTIFICATION_RECIPIENTS    -> notificationRecipients
-  *   HTTP_REQUEST_TIMEOUT (900) -> httpRequestTimeoutSec (default mirrored, main.py:39)
   *   BIGQUERY_BATCH_SIZE (500)  -> batchSize (default mirrored, main.py:40)
+  *   NOTIFICATION_RECIPIENTS    -> the Notifier's own `recipients`, not engine config
+  *   HTTP_REQUEST_TIMEOUT (900) -> none: the engine makes no HTTP request
   */
 final case class GraftConfig(
     inputDir: String,
@@ -20,9 +20,7 @@ final case class GraftConfig(
     errorsDir: String,
     checkpointDir: String,
     archiveDir: String,
-    notificationRecipients: String = "ops@localhost",
     sourceGlob: String = "*",
-    httpRequestTimeoutSec: Int = 900,
     batchSize: Int = 500)
 
 object GraftConfig {
@@ -52,9 +50,7 @@ object GraftConfig {
       errorsDir = req("GRAFT_ERRORS_DIR"),
       checkpointDir = req("GRAFT_CHECKPOINT_DIR"),
       archiveDir = req("GRAFT_ARCHIVE_DIR"),
-      notificationRecipients = env.getOrElse("GRAFT_NOTIFY_TO", "ops@localhost"),
       sourceGlob = env.getOrElse("GRAFT_SOURCE_GLOB", "*"),
-      httpRequestTimeoutSec = posInt("GRAFT_HTTP_TIMEOUT", 900),
       batchSize = posInt("GRAFT_BATCH_SIZE", 500))
   }
 }

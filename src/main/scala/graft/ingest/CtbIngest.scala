@@ -2,6 +2,7 @@ package graft.ingest
 
 import graft.schema.CtbSchema
 import graft.schema.CtbSchema._
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -9,7 +10,8 @@ import org.apache.spark.sql.types._
 /** Result of ingesting one CTB file.
   *
   * @param clean   typed rows that survived validation (the rows the reference
-  *                would insert into the sink, reference main.py:413-414)
+  *                would insert into the sink, reference main.py:413-414), all
+  *                21 canonical columns: one the header lacks is all nulls
   * @param errors  one row per recorded error string (reference accumulates
   *                human-readable strings, main.py:367-368; here a DataFrame so
   *                the error channel scales past driver memory)
@@ -48,104 +50,24 @@ object CtbIngest {
   private val LINE = "_line"
   private val LINENO = "_lineno"
 
-  /** Ingest a TSV file from `path` (local or any Hadoop FS). */
-  def ingestFile(spark: SparkSession, path: String): IngestResult =
-    ingestLines(spark, spark.read.text(path))
-
-  /** Core ingest given the raw line DataFrame of ONE file. Exposed
-    * separately so tests and the streaming path can reuse it.
+  /** Ingest ONE TSV file from `path` (local or any Hadoop FS): the one-file
+    * view of [[ingestMany]]. `clean` has the full 21-column canonical schema
+    * (no `_src_file`), `errors` the single `error` column. A path that
+    * lists more than one file fails as a whole.
     */
-  def ingestLines(spark: SparkSession, raw: DataFrame): IngestResult = {
-    // "blank" must match the reference's str.strip(): ALL whitespace (tabs
-    // included), not Spark trim's spaces-only — a trailing "\t \t " line
-    // must vanish in the file-level strip, and a leading one must not be
-    // mistaken for the header. rlike("\\S") is exactly "has any
-    // non-whitespace char".
-    val nonblank = col("value").rlike("\\S")
-    val ids = raw.select(col("value"),
-      spark_partition_id().as("_pid"), monotonically_increasing_id().as("_mid"),
-      input_file_name().as("_file"))
-
-    // Line numbering without a global sort (a round-1 scale bug: a
-    // no-partition Window forced the whole file through one task). Pass 1
-    // collects per-partition (count, min id, min/max non-blank id) — one
-    // tiny row per partition — and the driver turns them into per-partition
-    // offsets; lineno = _mid + adjust(_pid). Text-file splits are created in
-    // file-offset order for a single file, so partition-id order is line
-    // order (the same assumption the reference's enumerate() makes of its
-    // in-memory list).
-    val statRows = ids.groupBy(col("_pid")).agg(
-        count(lit(1)).as("n"), min(col("_mid")).as("m0"),
-        min(when(nonblank, col("_mid"))).as("nbMin"),
-        max(when(nonblank, col("_mid"))).as("nbMax"),
-        countDistinct(col("_file")).as("nf"),
-        min(col("_file")).as("f0"))
-      .collect()
-
-    // The offset-order numbering below assumes exactly ONE underlying file:
-    // with a glob/directory input, partition-id order interleaves files and
-    // the "header" would be an arbitrary file's first line. Detect it from
-    // the same stats pass and fail the file with a clear error instead of
-    // silently producing wrong line numbers. (Non-file inputs — tests build
-    // DataFrames in memory — report a single empty file name and pass.)
-    val fileNames = statRows.map(_.getString(6)).toSet
-    if (statRows.exists(_.getLong(5) > 1) || fileNames.size > 1)
-      return failed(spark,
-        s"Expected exactly one input file, got multiple: ${fileNames.filter(_.nonEmpty).take(3).mkString(", ")} ...")
-
-    val stats = statRows
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
-        if (r.isNullAt(3)) None else Some(r.getLong(3)),
-        if (r.isNullAt(4)) None else Some(r.getLong(4))))
-      .sortBy(_._1)
-
-    // B1: no non-blank line at all -> whole file Failed.
-    if (stats.isEmpty || stats.forall(_._4.isEmpty))
-      return failed(spark, "File is empty")
-
-    var off = 0L
-    val adjust = stats.map { case (pid, n, m0, _, _) =>
-      val a = off - m0 + 1; off += n; (pid, a)
-    }.toMap
-
-    // The reference strips the WHOLE file before splitting (main.py:287-288):
-    // leading/trailing blank lines vanish, interior blank lines survive and
-    // hit the width check. Header = first non-blank line; numbering is
-    // relative to it (stripped-file coordinates, enumerate start=2).
-    val hdrLineno = stats.collect { case (pid, _, _, Some(nb), _) => nb + adjust(pid) }.min
-    val lastLineno = stats.collect { case (pid, _, _, _, Some(nb)) => nb + adjust(pid) }.max
-    // B1: header-only file -> whole file Failed.
-    if (lastLineno == hdrLineno)
-      return failed(spark, "File contains no data rows")
-
-    val (hdrPid, hdrMid) = stats.collect { case (pid, _, _, Some(nb), _) => (pid, nb) }
-      .minBy { case (pid, nb) => nb + adjust(pid) }
-    val headerLine = ids.filter(col("_pid") === hdrPid && col("_mid") === hdrMid)
-      .collect()(0).getString(0)
-
-    val rawHeaders = headerLine.split("\t", -1).toSeq
-    // B3+B4: clean + canonicalize headers (metadata -> driver-side Scala).
-    val canonical = rawHeaders.map(CtbSchema.canonicalName)
-    // B5: unknown header fails the whole file.
-    val unknown = canonical.filterNot(columnTypes.contains)
-    if (unknown.nonEmpty)
-      return failed(spark, s"Schema mismatch. Unknown columns: ${unknown.mkString(", ")}")
-
-    val relAdjust = adjust.map { case (pid, a) => (pid, a - hdrLineno + 1) }
-    val numbered = ids
-      .withColumn(LINENO, col("_mid") + element_at(typedlit(relAdjust), col("_pid")))
-      .filter(col(LINENO) > 1)                          // data rows start after the header
-      .filter(col(LINENO) <= lastLineno - hdrLineno + 1) // file-level strip of trailing blanks
-      .withColumnRenamed("value", LINE)
-      .drop("_pid", "_mid", "_file")
-
-    val (clean, errors) = applyRowRules(numbered, canonical, keyCols = Nil)
-    IngestResult(clean, errors, fileFailed = false, failureReason = None)
+  def ingestFile(spark: SparkSession, path: String): IngestResult = {
+    val listed = listFiles(spark, path)
+    val res =
+      if (listed.size <= 1) ingestListed(spark, path, listed)
+      else MultiIngestResult(emptyFrame(spark, cleanSchema), emptyFrame(spark, errorSchema),
+        Map(path -> s"Expected exactly one input file, got multiple: ${listed.take(3).map(_.getPath).mkString(", ")} ..."))
+    IngestResult(res.clean.drop(SRC_FILE), res.errors.select(col("error")),
+      res.fileFailed.nonEmpty, res.fileFailed.values.headOption)
   }
 
   /** B6-B13 row rules over numbered lines: width check, trim, null-if-empty,
-    * typed casts, row-drop, error strings. `keyCols` (e.g. the source-file
-    * column in the multi-file path) ride through to both outputs.
+    * typed casts, row-drop, error strings. `keyCols` (the source-file
+    * column) ride through to both outputs.
     */
   private def applyRowRules(
       numbered: DataFrame,
@@ -241,16 +163,35 @@ object CtbIngest {
     * with zero length are reported in `fileFailed` as B1 "File is empty"
     * (keyed by their qualified path).
     */
-  def ingestMany(spark: SparkSession, pathOrGlob: String): MultiIngestResult = {
+  def ingestMany(spark: SparkSession, pathOrGlob: String): MultiIngestResult =
+    ingestListed(spark, pathOrGlob, listFiles(spark, pathOrGlob))
+
+  private def ingestListed(
+      spark: SparkSession, pathOrGlob: String,
+      listed: Seq[FileStatus]): MultiIngestResult = {
     val res = ingestManyLines(spark, spark.read.text(pathOrGlob))
-    val p = new org.apache.hadoop.fs.Path(pathOrGlob)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val matched = Option(fs.globStatus(p)).getOrElse(Array.empty).toSeq
-    val leaves = matched.flatMap(st =>
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq else Seq(st))
-    val zero = leaves.filter(st => st.isFile && st.getLen == 0)
+    val zero = listed.filter(_.getLen == 0)
       .map(st => scanKey(st.getPath) -> "File is empty") // B1
     if (zero.isEmpty) res else res.copy(fileFailed = res.fileFailed ++ zero)
+  }
+
+  /** The files under `pathOrGlob`: every glob match, a matched directory
+    * replaced by its files (its whole tree when `recursive`) except hidden
+    * `_*`/`.*` names, which a Spark scan of the directory skips too; no
+    * match lists as empty. Every 0-byte check (files a text scan cannot
+    * see) reads it.
+    */
+  def listFiles(spark: SparkSession, pathOrGlob: String, recursive: Boolean = false): Seq[FileStatus] = {
+    val p = new Path(pathOrGlob)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Option(fs.globStatus(p)).getOrElse(Array.empty).toSeq.flatMap { st =>
+      if (!st.isDirectory) Seq(st)
+      else {
+        val it = fs.listFiles(st.getPath, recursive)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next(): FileStatus)
+          .filterNot(f => "_.".contains(f.getPath.getName.head)).toSeq
+      }
+    }
   }
 
   /** The exact string `input_file_name()` yields for `path`, so zero-byte
@@ -260,26 +201,27 @@ object CtbIngest {
     * `Path`/`makeQualified` stringification produces (`file:/tmp/x`) —
     * rebuild the URI with `authority = ""` to match.
     */
-  private def scanKey(p: org.apache.hadoop.fs.Path): String = {
+  private def scanKey(p: Path): String = {
     val u = p.toUri
     if (u.getScheme == null) p.toString
     else new java.net.URI(u.getScheme,
       Option(u.getAuthority).getOrElse(""), u.getPath, null, null).toString
   }
 
-  /** Multi-file core: the single-file semantics (B1-B13), applied per
-    * source file, driven by ONE stats pass and one header-collection pass.
+  /** The ingest core: the B1-B13 semantics, applied per source file,
+    * driven by ONE stats pass and one header-collection pass.
     *
     * How it scales past the sequential per-file driver loop:
     *   1. per-(file, partition) stats — counts, min id, min/max non-blank
     *      id — come from one aggregation (a few rows per partition);
-    *      per-file line numbers are then `_mid + adjust(file, partition)`
-    *      exactly as in the single-file path. Within one file, equal-size
-    *      text splits keep offset order under Spark's stable
-    *      size-descending packing (same assumption ingestLines documents);
-    *      rows of different files never share a (file, partition) key
-    *      ordering problem because a partition reads its files
-    *      sequentially.
+    *      per-file line numbers are then `_mid + adjust(file, partition)`,
+    *      without a global sort (a no-partition Window would force a whole
+    *      file through one task). Within one file, text splits are read in
+    *      file-offset order and keep it under Spark's stable size-descending
+    *      packing, so partition-id order is line order (the assumption the
+    *      reference's enumerate() makes of its in-memory list); rows of
+    *      different files never share a (file, partition) key ordering
+    *      problem because a partition reads its files sequentially.
     *   2. all header lines are fetched in ONE filter keyed by the per-file
     *      header coordinates from (1) — not one driver round-trip per file.
     *   3. files are grouped by canonical header layout; each group runs the
@@ -297,8 +239,7 @@ object CtbIngest {
     * Caveat: a 0-BYTE file contributes no scan rows, so it is invisible to
     * THIS DataFrame-entry point (no `fileFailed` entry) — the caller owns
     * the file listing and must diff it against the results ([[ingestMany]]
-    * and the streaming drain both do; [[ingestFile]] sees the empty scan
-    * directly).
+    * and the streaming drain both do, through [[listFiles]]).
     */
   def ingestManyLines(spark: SparkSession, raw: DataFrame): MultiIngestResult = {
     // "blank" must match the reference's str.strip(): ALL whitespace (tabs
@@ -338,6 +279,10 @@ object CtbIngest {
           val adjust = chunks.map { case (pid, n, m0, _, _) =>
             val a = off - m0 + 1; off += n; (pid, a)
           }.toMap
+          // The reference strips the WHOLE file before splitting
+          // (main.py:287-288): leading/trailing blank lines vanish, interior
+          // ones survive and hit the width check. Header = first non-blank
+          // line; numbering is relative to it (enumerate start=2).
           val hdr = chunks.collect { case (pid, _, _, Some(nb), _) => (pid, nb) }
             .minBy { case (pid, nb) => nb + adjust(pid) }
           val hdrLineno = hdr._2 + adjust(hdr._1)
@@ -370,13 +315,6 @@ object CtbIngest {
         } else Some(file -> canonical)
     }
 
-    val emptyClean = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(StructField(SRC_FILE, StringType) +: sparkSchema.fields))
-    val emptyErr = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField(SRC_FILE, StringType), StructField("error", StringType))))
-
     // (3) one row-rule plan per distinct layout
     val groups = canonicalByFile.groupBy(_._2).toSeq.map {
       case (canonical, fileMap) =>
@@ -395,43 +333,30 @@ object CtbIngest {
           .withColumnRenamed("value", LINE)
           .withColumnRenamed("_file", SRC_FILE)
           .drop("_pid", "_mid")
-        val (clean, errors) = applyRowRules(numbered, canonical, keyCols = Seq(SRC_FILE))
-        // null-fill to the full canonical schema so layout groups union
-        val present = canonical.toSet
-        val full = canonicalColumns.foldLeft(clean) { (df, c) =>
-          if (present.contains(c)) df else df.withColumn(c, lit(null).cast(sparkSchema(c).dataType))
-        }.select(col(SRC_FILE) +: canonicalColumns.map(col): _*)
-        (full, errors)
+        applyRowRules(numbered, canonical, keyCols = Seq(SRC_FILE))
     }
 
+    // the full-schema empty frame leads: absent columns union in as nulls
     MultiIngestResult(
-      clean = groups.map(_._1).foldLeft(emptyClean)(_ unionByName _),
-      errors = groups.map(_._2).foldLeft(emptyErr)(_ unionByName _),
+      clean = groups.map(_._1)
+        .foldLeft(emptyFrame(spark, cleanSchema))(_.unionByName(_, allowMissingColumns = true)),
+      errors = groups.map(_._2).foldLeft(emptyFrame(spark, errorSchema))(_ unionByName _),
       fileFailed = failures.toMap)
   }
 
-  /** Type-safe view of a full-width clean result: a Dataset[CtbRecord] for
-    * callers that want compile-time column/type checking downstream.
-    * Requires all 21 canonical columns (a partial-header file keeps the
-    * DataFrame form — missing columns are filled as nulls here).
+  /** Type-safe view of a clean result: a Dataset[CtbRecord] for callers
+    * that want compile-time column/type checking downstream (columns absent
+    * from the file's header are None).
     */
   def typed(res: IngestResult): org.apache.spark.sql.Dataset[graft.schema.CtbRecord] = {
     val spark = res.clean.sparkSession
     import spark.implicits._
-    val present = res.clean.columns.toSet
-    val full = canonicalColumns.foldLeft(res.clean) { (df, c) =>
-      if (present.contains(c)) df
-      else df.withColumn(c, lit(null).cast(sparkSchema(c).dataType))
-    }
-    full.select(canonicalColumns.map(col): _*).as[graft.schema.CtbRecord]
+    res.clean.select(canonicalColumns.map(col): _*).as[graft.schema.CtbRecord]
   }
 
-  private def failed(spark: SparkSession, reason: String): IngestResult = {
-    val emptyClean = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sparkSchema)
-    val emptyErr = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("error", StringType))))
-    IngestResult(emptyClean, emptyErr, fileFailed = true, Some(reason))
-  }
+  private val cleanSchema = StructType(StructField(SRC_FILE, StringType) +: sparkSchema.fields)
+  private val errorSchema = StructType(Seq(StructField(SRC_FILE, StringType), StructField("error", StringType)))
+
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 }

@@ -1,9 +1,10 @@
 package graft.ingest
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Destination-table sink: existence precondition + batched append.
   *
@@ -17,10 +18,11 @@ import org.apache.spark.sql.types.StructType
   * `batchSize` with PER-BATCH error isolation and partial-success
   * accounting — a failing batch records its error and the loop continues;
   * the file counts as successfully processed iff at least one row landed.
-  * Batch ids derive from per-partition monotonic ids (no global sort), so
-  * slicing is partition-parallel; the per-batch commit loop itself is a
-  * faithful reproduction of the reference's RPC batching — at production
-  * scale a connector's own batched writer replaces it (Spark's file
+  * Batch ids derive from per-partition row indexes (no global sort), so
+  * slicing is partition-parallel ([[BatchPlan]]); the per-batch commit
+  * loop itself is a faithful reproduction of the reference's RPC
+  * batching — at production scale a connector's own batched writer
+  * replaces it (Spark's file
   * committer is all-or-nothing per job, which cannot express the
   * reference's partial success).
   */
@@ -152,7 +154,8 @@ object Sink {
   def writeBatchIdempotent(df: DataFrame, sinkDir: String, batchId: Long): Unit =
     df.write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
 
-  /** C3: append `clean` to `path` in batches of at most `batchSize` rows.
+  /** C3: append `clean` to `path` in batches of at most `batchSize` rows —
+    * the one-key case of [[BatchPlan]].
     *
     * @param writeBatch pluggable batch writer (tests inject failures to
     *                   exercise the partial-success accounting); default
@@ -163,24 +166,58 @@ object Sink {
       path: String,
       batchSize: Int,
       writeBatchOpt: Option[(DataFrame, Long) => Unit] = None): BatchedWriteResult = {
+    val plan = new BatchPlan(clean.withColumn("_key", lit("")), "_key", batchSize)
+    try plan.write("", writeBatchOpt.getOrElse(
+      (df: DataFrame, _: Long) => df.write.mode("append").parquet(path)))
+    finally plan.release()
+  }
+
+  /** The C3 batches of every value of the string column `key` (e.g. the
+    * source file) at once. A key's batches are chunks of at most
+    * `batchSize` of ITS rows within each input partition: batch id =
+    * ((partition << 33) + the row's index among its key's rows there) div
+    * batchSize, the value `monotonically_increasing_id() div batchSize`
+    * gives over that key's rows alone — other keys in the partition never
+    * move a boundary. The rows are persisted with their ids once (one
+    * narrow pass, no sort) and every (key, batch) row count comes from
+    * one aggregate, run by the constructor: a plan that cannot be built
+    * throws before any write. Call [[release]] when done.
+    */
+  private[graft] final class BatchPlan(clean: DataFrame, key: String, batchSize: Int) {
     require(batchSize >= 1, s"appendBatched: batchSize must be >= 1, got $batchSize")
-    val writeBatch = writeBatchOpt.getOrElse(
-      (df: DataFrame, _: Long) => df.write.mode("append").parquet(path))
-    // batch id from the per-partition monotonic id: groups of <= batchSize
-    // rows within each partition — bounded batch size without a global sort
-    // persisted so batch membership is computed once and stays stable across
-    // the per-batch actions (monotonic ids must not be re-derived per pass)
-    val withBatch = clean.withColumn("_batch",
-      expr(s"monotonically_increasing_id() div $batchSize")).persist()
-    try {
-      val batchIds = withBatch.select(col("_batch")).distinct()
-        .collect().map(_.getLong(0)).sorted
+
+    private val rows = {
+      val keyAt = clean.schema.fieldIndex(key)
+      val size = batchSize // a local, so the task closure does not capture the plan
+      clean.mapPartitions { it =>
+        val base = TaskContext.getPartitionId().toLong << 33
+        val seen = scala.collection.mutable.HashMap.empty[String, Long]
+        it.map { r =>
+          val i = seen.getOrElse(r.getString(keyAt), 0L)
+          seen(r.getString(keyAt)) = i + 1
+          Row.fromSeq(r.toSeq :+ (base + i) / size)
+        }
+      }(Encoders.row(clean.schema.add("_batch", LongType, nullable = false)))
+    }.persist()
+
+    /** key -> (batch id, rows) per batch, ascending by id */
+    private val batches: Map[String, Seq[(Long, Long)]] =
+      try rows.groupBy(key, "_batch").count().collect().toSeq
+        .groupMap(_.getString(0))(r => (r.getLong(1), r.getLong(2)))
+        .map { case (k, bs) => k -> bs.sortBy(_._1) }
+      catch { case e: Throwable => rows.unpersist(false); throw e }
+
+    /** Write `k`'s batches in id order; a batch's precomputed row count is
+      * added to `insertedRows` only if its write returns, and a failing
+      * batch records its error while the loop continues.
+      */
+    def write(k: String, writeBatch: (DataFrame, Long) => Unit): BatchedWriteResult = {
+      val mine = batches.getOrElse(k, Seq.empty)
       var inserted = 0L
       val errors = Seq.newBuilder[String]
-      batchIds.zipWithIndex.foreach { case (b, i) =>
-        val batch = withBatch.filter(col("_batch") === b).drop("_batch")
+      mine.zipWithIndex.foreach { case ((b, n), i) =>
+        val batch = rows.filter(col(key) === k && col("_batch") === b).drop(key, "_batch")
         try {
-          val n = batch.count()
           writeBatch(batch, b)
           inserted += n
         } catch {
@@ -188,7 +225,9 @@ object Sink {
             errors += s"Batch ${i + 1} insertion failed: ${e.getMessage}"
         }
       }
-      BatchedWriteResult(inserted, batchIds.length, errors.result())
-    } finally withBatch.unpersist(false)
+      BatchedWriteResult(inserted, mine.length, errors.result())
+    }
+
+    def release(): Unit = rows.unpersist(false)
   }
 }

@@ -47,6 +47,11 @@ object CorpusOps extends Pack {
     * ~57 md5+conv gram hashes once PER WINDOW j (~53×/row — measured
     * 100 s at sf0.1 vs sub-second with the binding).
     *
+    * `explode_outer` + not-null filter, not `explode`: InferFiltersFromGenerate
+    * would add `size(fps) > 0` below the Generate with `toks` inlined as
+    * `split(text)` INSIDE the lambda (quadratic in document length); `fps`
+    * is never empty and holds no null, so the rows are the same.
+    *
     * No persist (r19): dedup_winnowing now consumes the frame exactly
     * once (the posting-list form replaced the df-cap join + self-join,
     * which read it three times) — a cache materialization with a single
@@ -62,7 +67,8 @@ object CorpusOps extends Pack {
           |      * 65536L + greatest(65535L - i, 0L))), e ->
           |  array_distinct(transform(sequence(0, size(e) - 5), j ->
           |    array_min(slice(e, j + 1, 5)))))[0]""".stripMargin))
-      .select(col("doc_id"), explode(col("fps")).as("enc"))
+      .select(col("doc_id"), explode_outer(col("fps")).as("enc"))
+      .filter(col("enc").isNotNull)
       .select(col("doc_id"), expr("enc div 65536L").as("fph"))
       .distinct()
 
@@ -459,7 +465,8 @@ object CorpusOps extends Pack {
             |      graft_h60(concat(element_at(w, int(i) - 1), ' ', element_at(w, int(i)))) % 8 = 0)), b ->
             |    transform(zip_with(concat(array(1), b), concat(b, array(size(w) + 1)), (cs, ce) -> struct(cs AS cs, ce AS ce)),
             |      p -> concat_ws(' ', slice(w, p.cs, p.ce - p.cs))))[0])[0]""".stripMargin))
-        .select(col("doc_id"), explode(col("chs")).as("c"))
+        .select(col("doc_id"), explode_outer(col("chs")).as("c"))
+        .filter(col("c").isNotNull) // explode_outer: see winnowFps; chs is never empty
         .select(col("doc_id"), h60(col("c")).as("ch"))
         .persist() // chunk-df aggregate AND per-doc rollup both read it
       val cdf = chunks.groupBy(col("ch"))

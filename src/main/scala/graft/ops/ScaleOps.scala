@@ -719,7 +719,9 @@ object ScaleOps extends Pack {
       // (events_benford adjudication, bound in plan_audit.py).
       val docs = t(s, d, "documents")
         .select(col("doc_id"),
-          size(filter(split(col("text"), " "), w => w =!= "")).as("n_words"),
+          // array_remove, not a filter lambda: the n_words > 0 filter is
+          // pushed below this projection with the expression inlined
+          size(array_remove(split(col("text"), " "), "")).as("n_words"),
           length(regexp_replace(col("text"), " ", "")).as("n_chars"))
         .filter(col("n_words") > 0)
         .withColumn("dc", expr("(cast(n_chars as bigint) * 100) div n_words"))

@@ -7,8 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.hadoop.fs.Path
-import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicLong
+import scala.util.{Failure, Try}
 
 /** The reference's poll -> process -> ack cycle (reference main.py:648-687)
   * as a Structured Streaming file-source pipeline:
@@ -43,21 +43,20 @@ import java.util.concurrent.atomic.AtomicLong
   *   - row-error accounting is batch-wide: per-file error counts and
   *     bounded notification samples come from ONE aggregation, and the
   *     error sink gets ONE append per trigger instead of one per file;
-  *   - per-file sink COMMITS (the C3 batched append whose partial-success
-  *     accounting is per file) run concurrently from a bounded driver
-  *     pool; only the physical parquet appends serialize through
-  *     [[sinkLock]], because concurrent append jobs into ONE directory
-  *     race on the output committer's shared `_temporary` dir. Planning,
-  *     batch-id collection and per-batch counts — the scheduler-floor-bound
-  *     bulk of a small file's commit — overlap across files.
+  *   - the C3 commit runs from ONE batch plan per trigger
+  *     ([[Sink.BatchPlan]] keyed by source file), so committing a file
+  *     costs one append job per batch and nothing else. Files commit in
+  *     sorted order, each notified as soon as its batches are written.
   */
 object StreamIngest {
 
   final case class RunStats(filesSeen: Long, filesSucceeded: Long)
 
-  /** Serializes physical appends into the shared sink/error directories
-    * (see scale notes above). JVM-wide on purpose: two concurrent drains
-    * against the same directories must not interleave committer state.
+  /** Serializes physical appends into the shared sink/error directories:
+    * concurrent append jobs into ONE directory race on the output
+    * committer's shared `_temporary` dir. JVM-wide on purpose: two
+    * concurrent drains against the same directories must not interleave
+    * committer state.
     */
   private val sinkLock = new Object
 
@@ -71,33 +70,12 @@ object StreamIngest {
     // a file must be empty at BOTH run start and run end, and absent from
     // every batch, before it is B1-failed.
     val seenInBatch = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    def listZeroByte(): Set[String] = try {
-      val fs = new Path(cfg.inputDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Option(fs.globStatus(new Path(cfg.inputDir, cfg.sourceGlob))).getOrElse(Array.empty)
-        .toSeq.filter(st => st.isFile && st.getLen == 0)
-        .map(_.getPath.getName).toSet
-    } catch { case _: Exception => Set.empty[String] }
-    // The file source itself lists 0-byte files too: it "completes" them
-    // (zero rows, so no batch ever names them) and cleanSource=archive may
-    // move them out of inputDir before the end-of-run listing. A 0-byte
-    // file that migrated to the archive is still unprocessed data and must
-    // B1-fail — so the end listing is input ∪ archive (recursive: the
-    // source archives under the file's full source path).
-    def listZeroByteArchived(): Set[String] = try {
-      val p = new Path(cfg.archiveDir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) Set.empty[String]
-      else {
-        val it = fs.listFiles(p, true)
-        val b = Set.newBuilder[String]
-        while (it.hasNext) {
-          val st = it.next()
-          if (st.getLen == 0) b += st.getPath.getName
-        }
-        b.result()
-      }
-    } catch { case _: Exception => Set.empty[String] }
-    val zeroAtStart = listZeroByte()
+    def zeroByte(pathOrGlob: String, recursive: Boolean): Set[String] =
+      try CtbIngest.listFiles(spark, pathOrGlob, recursive)
+        .filter(_.getLen == 0).map(_.getPath.getName).toSet
+      catch { case _: Exception => Set.empty[String] }
+    val inputGlob = new Path(cfg.inputDir, cfg.sourceGlob).toString
+    val zeroAtStart = zeroByte(inputGlob, recursive = false)
 
     val raw = spark.readStream
       .option("cleanSource", "archive")
@@ -115,102 +93,27 @@ object StreamIngest {
         // here); the batch's rows are parsed as one distributed plan.
         val spark2 = batch.sparkSession
         val files = batch.select(input_file_name().as("f")).distinct()
-          .collect().map(_.getString(0)).sorted
+          .collect().map(_.getString(0)).sorted.toSeq
         files.foreach(f => seenInBatch.add(new Path(f).getName))
 
         if (files.nonEmpty) {
-          val sinkOk = Sink.tableExists(spark2, cfg.sinkDir)
-          val empty = CtbIngest.MultiIngestResult(
-            spark2.emptyDataFrame, spark2.emptyDataFrame, Map.empty)
+          def failAll(reason: String) = CtbIngest.MultiIngestResult(
+            spark2.emptyDataFrame, spark2.emptyDataFrame, files.map(_ -> reason).toMap)
           val multi =
-            if (!sinkOk) empty // C2 short-circuit: don't parse
+            if (!Sink.tableExists(spark2, cfg.sinkDir))
+              // C2: missing destination table fails the file, no auto-create
+              // (and no parse)
+              failAll(s"Destination table '${cfg.sinkDir}' does not exist. " +
+                "Please ensure the table is created before running.")
             else try CtbIngest.ingestManyLines(spark2, batch)
             catch { case e: Exception =>
               // a scan-level poison batch (unreadable file, vanished split)
               // must not kill the run (E1): fail the batch's files with the
               // cause, keep draining subsequent triggers
-              empty.copy(fileFailed = files.map(f => f -> s"Batch parse failed: $e").toMap)
+              failAll(s"Batch parse failed: $e")
             }
-          val clean = if (sinkOk) multi.clean.persist() else multi.clean
-          val errors = if (sinkOk) multi.errors.persist() else multi.errors
-          val anyCommittable = sinkOk && files.exists(f => !multi.fileFailed.contains(f))
-          // batch-wide row-error accounting: ONE aggregation for per-file
-          // counts + bounded samples, ONE append into the error sink
-          val errStats: Map[String, (Long, Seq[String])] =
-            if (!anyCommittable) Map.empty
-            else {
-              // Bound the notification sample BEFORE any aggregation buffer:
-              // the window ranks errors per file through a spillable sort, so
-              // only the 20 lexicographically-first survive into
-              // collect_list (when() yields null past the cap; collect_list
-              // skips nulls). A pathological million-error file thus never
-              // materializes its error strings in one executor buffer.
-              val perFile = org.apache.spark.sql.expressions.Window
-                .partitionBy(col(CtbIngest.SRC_FILE)).orderBy(col("error"))
-              errors
-                .withColumn("rn", row_number().over(perFile))
-                .groupBy(col(CtbIngest.SRC_FILE))
-                .agg(count(lit(1)).as("n"),
-                  collect_list(when(col("rn") <= 20, col("error"))).as("sample"))
-                .collect()
-                .map(r => r.getString(0) -> (r.getLong(1), r.getSeq[String](2).sorted.toList: Seq[String]))
-                .toMap
-            }
-          if (anyCommittable && errStats.nonEmpty) sinkLock.synchronized {
-            errors.drop(CtbIngest.SRC_FILE).write.mode("append").parquet(cfg.errorsDir)
-          }
-          val pool = Executors.newFixedThreadPool(math.min(8, files.length))
-          try {
-            files.map { file =>
-              pool.submit(new Runnable { def run(): Unit = {
-                seen.incrementAndGet()
-                val name = new Path(file).getName
-                try {
-                  if (!sinkOk) {
-                    // C2: missing destination table fails the file, no auto-create
-                    fileFailed(spark2, cfg, notifier, name,
-                      s"Destination table '${cfg.sinkDir}' does not exist. " +
-                        "Please ensure the table is created before running.")
-                  } else if (multi.fileFailed.contains(file)) {
-                    fileFailed(spark2, cfg, notifier, name, multi.fileFailed(file))
-                  } else {
-                    // per-file commit section over the persisted parsed batch:
-                    // C3 batched append + accounting stay per file; only the
-                    // physical append holds the lock
-                    val (nErrors, errSample) = errStats.getOrElse(file, (0L, Seq.empty[String]))
-                    val w = Sink.appendBatched(
-                      clean.filter(col(CtbIngest.SRC_FILE) === file).drop(CtbIngest.SRC_FILE),
-                      cfg.sinkDir, cfg.batchSize,
-                      writeBatchOpt = Some((df, _) => sinkLock.synchronized {
-                        df.write.mode("append").parquet(cfg.sinkDir)
-                      }))
-                    if (w.insertedRows > 0) {
-                      // partial success IS success (reference main.py:470-495)
-                      succeeded.incrementAndGet()
-                      if (w.batchErrors.isEmpty && nErrors == 0)
-                        notifier.notifySuccess(name, w.insertedRows)
-                      else
-                        notifier.notifyError(name,
-                          s"Inserted ${w.insertedRows} rows with ${nErrors} row-level " +
-                            s"errors and ${w.batchErrors.size} batch errors:\n" +
-                            (w.batchErrors ++ errSample).mkString("\n"))
-                    } else {
-                      fileFailed(spark2, cfg, notifier, name,
-                        s"No valid rows from '$name' could be inserted into the sink." +
-                          (if (nErrors > 0) "\nRow-level errors:\n" + errSample.mkString("\n") else ""))
-                    }
-                  }
-                } catch {
-                  case e: Exception => // poison file must not kill the run (E1)
-                    try fileFailed(spark2, cfg, notifier, name, e.toString)
-                    catch { case _: Exception => () }
-                }
-              }})
-            }.foreach(_.get()) // per-file try/catch above: get() only joins
-          } finally {
-            pool.shutdown()
-            if (sinkOk) { clean.unpersist(false); errors.unpersist(false) }
-          }
+          seen.addAndGet(files.length)
+          succeeded.addAndGet(commitTrigger(spark2, cfg, notifier, files, multi)): Unit
         }
       }
       .start()
@@ -228,7 +131,14 @@ object StreamIngest {
       val fs = new Path(cfg.inputDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val handledDir = new Path(cfg.checkpointDir, "graft-handled-empty")
       def handled(name: String): Boolean = fs.exists(new Path(handledDir, name))
-      val toFail = (zeroAtStart intersect (listZeroByte() ++ listZeroByteArchived()))
+      // The file source lists 0-byte files too: it "completes" them (zero
+      // rows, so no batch ever names them) and cleanSource=archive may move
+      // them out of inputDir before this listing. A 0-byte file that
+      // migrated to the archive is still unprocessed data and must B1-fail
+      // — so the end listing is input ∪ archive (recursive: the source
+      // archives under the file's full source path).
+      val zeroAtEnd = zeroByte(inputGlob, recursive = false) ++ zeroByte(cfg.archiveDir, recursive = true)
+      val toFail = (zeroAtStart intersect zeroAtEnd)
         .filterNot(n => seenInBatch.contains(n) || handled(n))
       toFail.toSeq.sorted.foreach { name =>
         seen.incrementAndGet()
@@ -251,10 +161,82 @@ object StreamIngest {
     RunStats(seen.get(), succeeded.get())
   }
 
+  /** Commit one parsed trigger; returns the number of files that
+    * succeeded. A batch plan that cannot be built fails every committable
+    * file with the cause (E1), like any other exception scoped to a file.
+    */
+  private[streaming] def commitTrigger(
+      spark: SparkSession, cfg: GraftConfig, notifier: Notifier,
+      files: Seq[String], multi: CtbIngest.MultiIngestResult): Int = {
+    val committable = files.exists(f => !multi.fileFailed.contains(f))
+    val errors = multi.errors.persist()
+    try {
+      // batch-wide row-error accounting: ONE aggregation for per-file
+      // counts + bounded samples, ONE append into the error sink.
+      // Bound the notification sample BEFORE any aggregation buffer: the
+      // window ranks errors per file through a spillable sort, so only the
+      // 20 lexicographically-first survive into collect_list (when() yields
+      // null past the cap; collect_list skips nulls). A pathological
+      // million-error file thus never materializes its error strings in
+      // one executor buffer.
+      val perFile = org.apache.spark.sql.expressions.Window
+        .partitionBy(col(CtbIngest.SRC_FILE)).orderBy(col("error"))
+      val errStats: Map[String, (Long, Seq[String])] =
+        if (!committable) Map.empty
+        else errors
+          .withColumn("rn", row_number().over(perFile))
+          .groupBy(col(CtbIngest.SRC_FILE))
+          .agg(count(lit(1)).as("n"),
+            collect_list(when(col("rn") <= 20, col("error"))).as("sample"))
+          .collect()
+          .map(r => r.getString(0) -> (r.getLong(1), r.getSeq[String](2).sorted.toList: Seq[String]))
+          .toMap
+      if (errStats.nonEmpty) sinkLock.synchronized {
+        errors.drop(CtbIngest.SRC_FILE).write.mode("append").parquet(cfg.errorsDir)
+      }
+      val plan =
+        if (committable) Try(new Sink.BatchPlan(multi.clean, CtbIngest.SRC_FILE, cfg.batchSize))
+        else Failure(new NoSuchElementException("no committable file"))
+      try files.count { file =>
+        val name = new Path(file).getName
+        try multi.fileFailed.get(file) match {
+          case Some(reason) =>
+            fileFailed(spark, cfg, notifier, name, reason)
+            false
+          case None =>
+            val (nErrors, errSample) = errStats.getOrElse(file, (0L, Seq.empty[String]))
+              val w = plan.get.write(file, (df, _) => sinkLock.synchronized {
+              df.write.mode("append").parquet(cfg.sinkDir)
+            })
+            if (w.insertedRows > 0) {
+              // partial success IS success (reference main.py:470-495)
+              if (w.batchErrors.isEmpty && nErrors == 0)
+                notifier.notifySuccess(name, w.insertedRows)
+              else
+                notifier.notifyError(name,
+                  s"Inserted ${w.insertedRows} rows with ${nErrors} row-level " +
+                    s"errors and ${w.batchErrors.size} batch errors:\n" +
+                    (w.batchErrors ++ errSample).mkString("\n"))
+              true
+            } else {
+              fileFailed(spark, cfg, notifier, name,
+                s"No valid rows from '$name' could be inserted into the sink." +
+                  (if (nErrors > 0) "\nRow-level errors:\n" + errSample.mkString("\n") else ""))
+              false
+            }
+        } catch {
+          case e: Exception => // poison file must not kill the run (E1)
+            try fileFailed(spark, cfg, notifier, name, e.toString)
+            catch { case _: Exception => () }
+            false
+        }
+      } finally plan.foreach(_.release())
+    } finally errors.unpersist(false)
+  }
+
   /** Failure path: every file-scoped failure converges on error-sink write +
     * D3 notification (reference §3.3 convergence). The parquet append holds
-    * [[sinkLock]] — failure handlers may run concurrently from the commit
-    * pool.
+    * [[sinkLock]].
     */
   private def fileFailed(
       spark: SparkSession, cfg: GraftConfig, notifier: Notifier,

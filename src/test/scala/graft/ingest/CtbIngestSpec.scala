@@ -244,7 +244,36 @@ class CtbIngestSpec extends AnyFunSuite with SparkSpec {
     val res = ingest(Seq(partial.mkString("\t"), row.mkString("\t")))
     assert(!res.fileFailed)
     assert(res.clean.count() == 1)
-    assert(res.clean.columns.length == 8)
+    assert(res.clean.columns.length == 21) // full canonical schema, absent columns null
+  }
+
+  test("ingestFile is the one-file view of ingestMany: full width, one-file failures") {
+    // a partial header still yields the full canonical width, absent columns null
+    val partial = ingest(Seq(rawHeaders.take(3).mkString("\t"), validRow().take(3).mkString("\t")))
+    assert(!partial.fileFailed)
+    assert(partial.clean.columns.toSeq == graft.schema.CtbSchema.canonicalColumns)
+    assert(partial.errors.columns.toSeq == Seq("error"))
+    val row = partial.clean.collect().toSeq
+    assert(row.length == 1 && row.head.getAs[String]("ORG_CODE") == "ORG1")
+    assert(row.head.isNullAt(row.head.fieldIndex("DEMAND_QTY")))
+    assert(row.head.isNullAt(row.head.fieldIndex("SNAPSHOT_DATE")))
+    // a directory of two files is not one file
+    val dir = Files.createTempDirectory("ctbtwo")
+    Seq("a.tsv", "b.tsv").foreach(n => Files.write(dir.resolve(n),
+      Seq(headerLine, validRow().mkString("\t")).mkString("\n").getBytes(StandardCharsets.UTF_8)))
+    val two = CtbIngest.ingestFile(spark, dir.toString)
+    assert(two.fileFailed && two.failureReason.get.contains("one input file"))
+    assert(two.clean.columns.length == 21 && two.clean.isEmpty)
+    // ...but hidden entries next to one file do not count (a scan skips them)
+    Files.delete(dir.resolve("b.tsv"))
+    Files.write(dir.resolve("_SUCCESS"), Array.empty[Byte])
+    Files.write(dir.resolve(".a.tsv.crc"), Array[Byte](1, 2))
+    val one = CtbIngest.ingestFile(spark, dir.toString)
+    assert(!one.fileFailed, one.failureReason)
+    assert(one.clean.count() == 1)
+    // a whitespace-only file is empty (B1)
+    val blank = ingest(Seq("  ", "\t \t", ""))
+    assert(blank.fileFailed && blank.failureReason.contains("File is empty"))
   }
 
   test("B1: empty file and header-only file fail whole-file") {

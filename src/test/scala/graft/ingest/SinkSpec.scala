@@ -144,6 +144,54 @@ class SinkSpec extends AnyFunSuite with SparkSpec {
     assert(e.getMessage.contains("batchSize"))
   }
 
+  test("C3 batch plan: files sharing a partition batch exactly as each would alone") {
+    // one trigger's worth of CTB files packed into ONE input partition: a
+    // 1200-row file (the largest, so it leads the partition) and six small
+    // ones behind it. Per-file batches from the trigger-wide plan must be
+    // the batches a solo appendBatched over that file's rows gives — a
+    // naive trigger-wide `monotonically_increasing_id() div batchSize`
+    // would let a boundary fall inside a small file.
+    import org.apache.spark.sql.functions.{col, countDistinct, expr, spark_partition_id}
+    val header = graft.schema.CtbSchema.canonicalColumns.mkString("\t")
+    def row(org: String) = Seq(org, "ACME", "C1", "I1", "CP1", "desc", "2025-01-15", "100",
+      "90", "2025-01-20", "F-A", "2025-01-22", "10", "2", "1", "GP", "M", "14", "GC",
+      "cpd", "2025-01-01").mkString("\t")
+    val dir = Files.createTempDirectory("plan")
+    def put(name: String, n: Int): Unit = Files.write(dir.resolve(name),
+      (header +: (1 to n).map(i => row(s"$name-$i"))).mkString("\n").getBytes("UTF-8"))
+    put("big.tsv", 1200)
+    val small = (0 until 16).map(i => 10 + 2 * i) // 400 rows in 16 files
+    small.zipWithIndex.foreach { case (n, i) => put(s"small$i.tsv", n) }
+    val total = 1200L + small.sum
+    val conf = spark.conf
+    val saved = Seq("spark.sql.files.openCostInBytes", "spark.sql.files.minPartitionNum")
+      .map(k => k -> conf.getOption(k))
+    try {
+      conf.set("spark.sql.files.openCostInBytes", "0")
+      conf.set("spark.sql.files.minPartitionNum", "1")
+      val clean = CtbIngest.ingestMany(spark, dir.toString).clean
+      val perPart = clean.groupBy(spark_partition_id()).count().collect()
+      assert(perPart.length == 1 && perPart.head.getLong(1) == total,
+        s"fixture regression: files must share one partition, got ${perPart.toSeq}")
+      val naive = clean.withColumn("b", expr("monotonically_increasing_id() div 500"))
+        .groupBy(CtbIngest.SRC_FILE).agg(countDistinct("b").as("n"))
+        .filter(col("n") > 1).count()
+      assert(naive == 2, "fixture regression: trigger-wide ids must split a small file")
+      val files = clean.select(CtbIngest.SRC_FILE).distinct().collect().map(_.getString(0)).sorted
+      val plan = new Sink.BatchPlan(clean, CtbIngest.SRC_FILE, 500)
+      val planned = try files.map(f => f -> plan.write(f, (_, _) => ())).toMap finally plan.release()
+      files.foreach { f =>
+        val solo = Sink.appendBatched(clean.filter(col(CtbIngest.SRC_FILE) === f)
+          .drop(CtbIngest.SRC_FILE), tmp("solo"), 500)
+        assert(planned(f) == solo, f)
+      }
+      val big = planned(files.find(_.endsWith("big.tsv")).get)
+      assert(big.attemptedBatches == 3 && big.insertedRows == 1200L)
+      assert(planned.values.map(_.insertedRows).sum == total)
+      assert(planned.values.map(_.attemptedBatches).sum == 3 + small.length)
+    } finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+  }
+
   test("C3: a failing batch is isolated — partial success, error accumulated") {
     import spark.implicits._
     val path = tmp("sink4")

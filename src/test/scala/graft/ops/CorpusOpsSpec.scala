@@ -122,6 +122,32 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
       s"the 100-token shared tail must survive the clamp, got: ${out.mkString(", ")}")
   }
 
+  test("no Filter re-derives an array inside a lambda (winnowing, CDC chunks, curriculum)") {
+    // Plan shape, not timing: an optimizer-written filter (the size > 0
+    // InferFiltersFromGenerate adds under an explode, or a filter pushed
+    // below the projection it reads) must not carry a higher-order
+    // function whose array argument is a derived expression — with
+    // dedup_winnowing's split(text) inlined into its window lambda, every
+    // window re-split the whole document (quadratic in its length).
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, HigherOrderFunction, NamedLambdaVariable}
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val dir = java.nio.file.Files.createTempDirectory("lambda-filter").toString
+    Seq((1L, (0 until 40).map(i => s"w$i").mkString(" ")), (2L, "a b"))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    Seq("dedup_winnowing", "dedup_cdc_chunks", "prep_curriculum").foreach { q =>
+      val plan = graft.SparkEntry.queries(q)(spark, dir).queryExecution.optimizedPlan
+      val derived = plan.collect { case f: Filter => f.condition }.flatMap(_.collect {
+        case h: HigherOrderFunction if h.arguments.exists {
+          case _: Attribute | _: NamedLambdaVariable => false
+          case _ => true
+        } => h.sql
+      })
+      assert(derived.isEmpty, s"$q: Filter holds a lambda over a derived array: ${derived.headOption.getOrElse("").take(160)}")
+    }
+    spark.catalog.clearCache() // dedup_cdc_chunks persists its chunk frame at build
+  }
+
   test("URL canonicalization is idempotent and handles each noise source") {
     import spark.implicits._
     val cases = Seq(

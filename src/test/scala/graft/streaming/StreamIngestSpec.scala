@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.config.GraftConfig
-import graft.ingest.Sink
+import graft.ingest.{CtbIngest, Sink}
 import graft.notify.LogNotifier
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
@@ -209,8 +209,8 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("a 50-file trigger commits every file with accounting intact") {
-    // exercises the bounded-pool commit path: per-file C3 accounting and
-    // notifications must be exactly per file even with concurrent commits
+    // one batch plan commits all 50 files: per-file C3 accounting and
+    // notifications must be exactly per file
     val cfg = mkCfg()
     val notifier = new LogNotifier()
     Sink.init(spark, cfg.sinkDir, graft.schema.CtbSchema.sparkSchema)
@@ -236,6 +236,70 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("commit cost: each added one-batch file adds exactly one job (its sink write)") {
+    // listener-counted guard on the one-plan commit: everything but the
+    // per-batch appends is per trigger, so 10 more clean one-batch files
+    // in a trigger cost exactly 10 more jobs
+    def jobsFor(nFiles: Int): Int = {
+      val cfg = mkCfg()
+      Sink.init(spark, cfg.sinkDir, graft.schema.CtbSchema.sparkSchema)
+      (1 to nFiles).foreach { i =>
+        writeFile(cfg, f"CTB_j$i%02d.tsv", Seq(rawHeaders.mkString("\t"), validRow(s"J$i").mkString("\t")))
+      }
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet(): Unit
+      }
+      org.apache.spark.GraftTestHooks.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      val stats = try StreamIngest.runOnce(spark, cfg, new LogNotifier())
+      finally {
+        org.apache.spark.GraftTestHooks.drainListenerBus(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(stats == StreamIngest.RunStats(nFiles.toLong, nFiles.toLong))
+      assert(spark.read.parquet(cfg.sinkDir).count() == nFiles)
+      jobs.get
+    }
+    val ten = jobsFor(10)
+    val twenty = jobsFor(20)
+    assert(twenty - ten == 10, s"10 files: $ten jobs, 20 files: $twenty jobs")
+  }
+
+  test("E1: a trigger whose batch plan cannot be built fails its files; the next trigger commits") {
+    import org.apache.spark.sql.functions.{lit, raise_error}
+    val cfg = mkCfg()
+    val notifier = new LogNotifier()
+    Sink.init(spark, cfg.sinkDir, graft.schema.CtbSchema.sparkSchema)
+    val good = CtbIngest.ingestMany(spark, {
+      writeFile(cfg, "CTB_ok.tsv", rawHeaders.mkString("\t") +: Seq(validRow("A"), validRow("B")).map(_.mkString("\t")))
+      s"${cfg.inputDir}/CTB_ok.tsv"
+    })
+    val okFile = good.clean.select(CtbIngest.SRC_FILE).first().getString(0)
+    // trigger 1: two committable files whose clean rows throw when the
+    // plan's aggregate reads them, and one whole-file failure
+    val poisoned = good.clean
+      .withColumn("ORG_CODE", raise_error(lit("poisoned aggregate")).cast("string"))
+    val t1 = Seq("file:///x/CTB_p1.tsv", "file:///x/CTB_p2.tsv", "file:///x/CTB_bad.tsv")
+    val n1 = StreamIngest.commitTrigger(spark, cfg, notifier, t1, CtbIngest.MultiIngestResult(
+      poisoned, good.errors.limit(0), Map("file:///x/CTB_bad.tsv" -> "Schema mismatch. Unknown columns: X")))
+    assert(n1 == 0)
+    val errs1 = notifier.sent.filter(_.subject.startsWith("ERROR"))
+    assert(errs1.length == 3)
+    Seq("CTB_p1.tsv", "CTB_p2.tsv").foreach { f =>
+      assert(errs1.exists(n => n.subject.contains(f) && n.body.contains("poisoned aggregate")), f)
+    }
+    assert(errs1.exists(n => n.subject.contains("CTB_bad.tsv") && n.body.contains("Unknown columns: X")))
+    // trigger 2 commits as usual
+    val n2 = StreamIngest.commitTrigger(spark, cfg, notifier, Seq(okFile), good)
+    assert(n2 == 1)
+    assert(notifier.sent.exists(n => n.subject.startsWith("SUCCESS") && n.subject.contains("CTB_ok.tsv")))
+    assert(spark.read.parquet(cfg.sinkDir).count() == 2)
+    val errRows = spark.read.parquet(cfg.errorsDir).collect().map(_.getString(0))
+    assert(errRows.count(_.contains("poisoned aggregate")) == 2)
+  }
+
   test("C2: missing destination table fails the file without auto-creating it") {
     val cfg = mkCfg()
     val notifier = new LogNotifier()
@@ -257,8 +321,8 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
       "GRAFT_INPUT_DIR" -> "/in", "GRAFT_SINK_DIR" -> "/sink",
       "GRAFT_ERRORS_DIR" -> "/e", "GRAFT_CHECKPOINT_DIR" -> "/c",
       "GRAFT_ARCHIVE_DIR" -> "/a"))
-    assert(cfg.batchSize == 500)            // BIGQUERY_BATCH_SIZE default (main.py:40)
-    assert(cfg.httpRequestTimeoutSec == 900) // HTTP_REQUEST_TIMEOUT default (main.py:39)
+    assert(cfg.batchSize == 500) // BIGQUERY_BATCH_SIZE default (main.py:40)
+    assert(cfg.productArity == 7) // no notification or HTTP knobs: nothing in the engine reads them
     val e = intercept[IllegalArgumentException](GraftConfig.fromEnv(Map.empty))
     assert(e.getMessage.contains("GRAFT_INPUT_DIR"))
   }
@@ -272,7 +336,7 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
       GraftConfig.fromEnv(base + ("GRAFT_BATCH_SIZE" -> "0")))
     assert(zero.getMessage.contains("GRAFT_BATCH_SIZE"))
     val junk = intercept[IllegalArgumentException](
-      GraftConfig.fromEnv(base + ("GRAFT_HTTP_TIMEOUT" -> "soon")))
-    assert(junk.getMessage.contains("GRAFT_HTTP_TIMEOUT"))
+      GraftConfig.fromEnv(base + ("GRAFT_BATCH_SIZE" -> "soon")))
+    assert(junk.getMessage.contains("GRAFT_BATCH_SIZE"))
   }
 }

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Plan-shape gate: run after `sbt "runMain graft.Explain <sfDir>" > out.txt`
 to assert no query gained an unapproved non-equi join, a cartesian
-product, or a single-partition funnel (a Window over an empty partitionBy,
+product, a Filter holding a lambda over a derived (non-attribute) array,
+or a single-partition funnel (a Window over an empty partitionBy,
 or an Exchange SinglePartition that carries data rows). Exits 1 listing
 offenders.
 
@@ -115,6 +116,16 @@ SINGLE_PARTITION_ALLOWED = {"sort_paginate", "events_benford", "events_survival"
                             "prep_balanced_sample", "sim_recall_curve",
                             "agg_bootstrap_ci"}
 
+# Higher-order functions as Catalyst prints them, with the number of
+# leading array/map arguments each takes before its lambdas.
+HOF_ARRAY_ARGS = {"transform": 1, "filter": 1, "exists": 1, "forall": 1,
+                  "aggregate": 1, "reduce": 1, "array_sort": 1,
+                  "map_filter": 1, "transform_keys": 1, "transform_values": 1,
+                  "zip_with": 2, "map_zip_with": 2}
+HOF_CALL = re.compile(r"\b(" + "|".join(HOF_ARRAY_ARGS) + r")\(")
+# an attribute reference (`toks#5`, `enc#12L`) or a bound lambda variable
+ATTRIBUTE = re.compile(r"^(?:lambda )?[A-Za-z_][\w.]*#\d+L?$")
+
 # ---------------------------------------------------------------------------
 # formatted-explain parsing
 
@@ -125,6 +136,37 @@ WINDOW_ARGS_TAIL = re.compile(r"\],\s*\[([^\[\]]*)\],\s*\[[^\[\]]*\]\s*$")
 
 def strip_info(line):
     return re.sub(r"^\[info\]\s?", "", line)
+
+
+def call_args(text, start):
+    """Top-level arguments of the call whose '(' is at text[start]."""
+    args, depth, cur = [], 0, start + 1
+    for i in range(start, len(text)):
+        c = text[i]
+        if c == "(":
+            depth += 1
+        elif c == ")":
+            depth -= 1
+            if depth == 0:
+                args.append(text[cur:i].strip())
+                return args
+        elif c == "," and depth == 1:
+            args.append(text[cur:i].strip())
+            cur = i + 1
+    return args
+
+
+def derived_array_lambdas(condition):
+    """Array arguments of lambda-taking calls in `condition` that are not
+    attributes: each lambda call re-evaluates such an expression."""
+    found = []
+    for m in HOF_CALL.finditer(condition):
+        args = call_args(condition, m.end() - 1)
+        if not any(a.startswith("lambdafunction(") for a in args):
+            continue
+        found += [a for a in args[:HOF_ARRAY_ARGS[m.group(1)]]
+                  if not ATTRIBUTE.match(a)]
+    return found
 
 
 def audit_section(name, body):
@@ -146,6 +188,20 @@ def audit_section(name, body):
     for k, (i, nid, cls) in enumerate(headers):
         end = headers[k + 1][0] if k + 1 < len(headers) else len(lines)
         nodes[nid] = (cls, "\n".join(lines[i:end]))
+
+    # A Filter must hold no lambda over a derived (non-attribute) array.
+    # Optimizer rules that write filters (InferFiltersFromGenerate's
+    # size(arr) > 0 under an explode) inline a projected array back into
+    # the condition, so a lambda that read a bound column re-derives it on
+    # every call — dedup_winnowing re-split the whole document per window.
+    for nid, (cls, detail) in nodes.items():
+        if cls != "Filter":
+            continue
+        cond = next((l for l in detail.splitlines() if l.startswith("Condition")), "")
+        derived = derived_array_lambdas(cond)
+        if derived:
+            bad.append(f"{name}: Filter (node {nid}) holds a lambda over a "
+                       f"non-attribute array: {derived[0][:80]}")
 
     # Fanout-argmin regression guard: no Exchange keyed on vec_id
     if name in NO_VEC_ID_EXCHANGE:
@@ -189,7 +245,7 @@ def audit_section(name, body):
 
 def main():
     text = open(sys.argv[1]).read()
-    sections = re.split(r"===== (\w+) =====", text)
+    sections = re.split(r"===== ([a-z0-9_]+) =====", text)  # not "===== Subqueries ====="
     bad = []
     # sections = [preamble, name1, body1, name2, body2, ...]
     for name, body in zip(sections[1::2], sections[2::2]):
@@ -204,7 +260,8 @@ def main():
     # SinglePartition exchanges are banned OUTSIDE the documented
     # bounded-domain allowlists above (each entry carries an in-file
     # row-bound rationale) — not absent from every plan
-    print(f"plan audit OK: {n} queries — no cartesians, no unapproved global "
+    print(f"plan audit OK: {n} queries — no cartesians, no Filter lambda over a "
+          f"derived array, no unapproved global "
           f"windows, no unapproved data-bearing SinglePartition exchanges "
           f"({len(SINGLE_PARTITION_ALLOWED)} allowlisted bounded-domain frames); "
           f"BNLJ only in {sorted(BNLJ_ALLOWED)}")
@@ -280,6 +337,21 @@ Arguments: hashpartitioning(vec_id#2L, 4), ENSURE_REQUIREMENTS, [plan_id=103]
 """
 
 
+# dedup_winnowing before its explode_outer fix: the inferred size(fps) > 0
+# filter with `toks` inlined as split(text) inside the window lambda
+INLINED_LAMBDA_FILTER = """\
+(2) Filter
+Input [2]: [doc_id#0L, text#1]
+Condition : ((size(split(text#1,  , -1), false) >= 12) AND (size(transform(array(transform(sequence(0, (size(split(text#1,  , -1), false) - 4), None, Some(UTC)), lambdafunction(((shiftright(graft_h60(concat_ws( , slice(split(text#1,  , -1), (lambda i#8 + 1), 4))), 16) * 65536) + greatest((65535 - cast(lambda i#8 as bigint)), 0)), lambda i#8, false))), lambdafunction(array_distinct(transform(sequence(0, (size(lambda e#9, false) - 5), None, Some(UTC)), lambdafunction(array_min(slice(lambda e#9, (lambda j#10 + 1), 5)), lambda j#10, false))), lambda e#9, false))[0], false) > 0))
+"""
+
+ATTRIBUTE_LAMBDA_FILTER = """\
+(2) Filter
+Input [2]: [doc_id#0L, tags#3]
+Condition : (exists(tags#3, lambdafunction((lambda x#8 = a), lambda x#8, false)) AND (size(split(text#1,  , -1), false) >= 12))
+"""
+
+
 def selftest():
     red = audit_section("events_rfm", OLD_GLOBAL_WINDOW)
     assert any("empty partitionBy" in b for b in red), red
@@ -292,8 +364,11 @@ def selftest():
     assert any("unapproved BroadcastNestedLoopJoin" in b for b in red), red
     assert audit_section("sim_knn_join", FANOUT_ARGMIN.replace(
         "BroadcastNestedLoopJoin Cross BuildRight", "SortMergeJoin Inner")) == []
+    red = audit_section("dedup_winnowing", INLINED_LAMBDA_FILTER)
+    assert len(red) == 1 and "non-attribute array" in red[0], red
+    assert audit_section("dedup_winnowing", ATTRIBUTE_LAMBDA_FILTER) == []
     print("plan_audit selftest OK (old global-window shape RED, re-shaped plan GREEN, "
-          "ml_kmeans vec_id-exchange RED)")
+          "ml_kmeans vec_id-exchange RED, inlined-lambda Filter RED)")
 
 
 if __name__ == "__main__":
